@@ -1,9 +1,10 @@
 """Benchmark harness (driver contract).
 
 Runs every driver-contract query at ``$SPARK_GRAFT_SF_DIR`` (default
-``/root/testdata/sf0.1``) on ``local[$SPARK_GRAFT_CPUS]`` (default 32)
-and the north-rule parse→enrich→route→aggregate pipeline over a
-deterministic generated pages table, then prints ONE JSON line::
+``DEFAULT_SF_DIR``, scale factor 0.1) on ``local[$SPARK_GRAFT_CPUS]``
+(default ``os.cpu_count()``) and the north-rule
+parse→enrich→route→aggregate pipeline over a deterministic generated
+pages table, then prints ONE JSON line::
 
     {"metric": ..., "value": N, "unit": "sec", "queries": {...}, "sf": ...}
 
@@ -19,9 +20,6 @@ the same job was measured at 12 s and 138 s back-to-back), so a single
 cold run measures the VM, not the plan; min-of-2 is the steady-state
 engine time. The session itself is additionally warmed with a shuffle,
 a pandas-UDF stage, and one scan per table before any timing.
-
-Scaling-efficiency evidence (two parallelism levels, fresh JVM each) is
-a separate harness: ``python scripts/bench_scaling.py`` → BENCH.md.
 """
 
 from __future__ import annotations
@@ -61,7 +59,7 @@ def run_noop(df) -> None:
 
 def main() -> int:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", DEFAULT_SF_DIR)
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count()))
     sf = _sf_of(sf_dir)
 
     spark = build_session(
@@ -126,8 +124,8 @@ def main() -> int:
                 keyword=None, severity_filter=None, incremental=False,
             )
             pipe_walls.append(time.time() - t0)
-            # same-disk-state discipline as scripts/bench_scaling_worker:
-            # drop the previous run's unflushed output before the next.
+            # same disk state for every run: drop the previous run's
+            # unflushed output before the next.
             shutil.rmtree(out_i, ignore_errors=True)
         pipe_sec = min(pipe_walls)
         timings["pipeline_e2e"] = round(pipe_sec, 3)

@@ -1153,7 +1153,7 @@ def _warc_fixture_dir(
     base = datetime(2024, 1, 1)
     shards: list[list[bytes]] = [[], [], [], []]
     # format version: bump on layout change (stale /tmp dirs regenerate)
-    salt = b"warcfix-html-v1" if wrap_html else b"warcfix-v2-cdx"
+    salt = b"warcfix-html-v2" if wrap_html else b"warcfix-v3-cdx"
     digest = hashlib.sha1(salt)
     for r in rows:
         payload = r.text
@@ -1184,15 +1184,16 @@ def _warc_fixture_dir(
     done = os.path.join(d, ".done")
     if not os.path.exists(done):
         os.makedirs(d, exist_ok=True)
-        # Two processes may race here.  Each part file is written to a
-        # pid-unique temp name and os.replace'd into place, so a reader
-        # that already saw .done (published by the other process) can
-        # never observe a truncated archive — content is deterministic,
-        # so concurrent replaces are idempotent.
+        # Two processes may race here.  Each part file and its CDX
+        # sidecar go to pid-unique temp names and are os.replace'd into
+        # place, so a reader that already saw .done (published by the
+        # other process) never observes a truncated archive — content is
+        # deterministic, so concurrent replaces are idempotent.
         for i, recs in enumerate(shards):
             part = os.path.join(d, f"part-{i}.warc.gz")
             tmp = f"{part}.{os.getpid()}.tmp"
             write_warc_file(tmp, recs)
+            os.replace(f"{tmp}.cdx", f"{part}.cdx")
             os.replace(tmp, part)  # atomic per-file publish
         with open(f"{done}.{os.getpid()}.tmp", "w") as fh:
             fh.write("ok")
@@ -1756,7 +1757,7 @@ def q_cp1_corpus_pipeline(spark, sf_dir):
     rules (keep only) → language ID → exact dedup (lowest doc_id per
     md5 fingerprint survives) → deterministic train/val/test hash
     split → per-(split, lang) data-card census. Every stage is an
-    already-oracle-checked operator (fl1 rules, t4's expression spec,
+    already-oracle-checked operator (fl1 rules, t4's lang_id kernel,
     d1 dedup, sp1 split); composing them keeps a single Catalyst plan
     with TWO shuffles total (fingerprint agg + census agg; the
     winner semi-join reuses the fingerprint partitioning) — everything
@@ -1769,7 +1770,7 @@ def q_cp1_corpus_pipeline(spark, sf_dir):
     ).select(
         "doc_id",
         "n_chars",
-        T.lang_id_expr(F.col("text")).alias("lid"),
+        T.lang_id(F.col("text")).alias("lid"),
         F.md5(F.col("text").cast("binary")).alias("fp"),
     )
     winners = kept.groupBy("fp").agg(F.min("doc_id").alias("doc_id"))

@@ -120,6 +120,8 @@ def decode_png(blob: bytes) -> np.ndarray:
             raise ValueError(f"PNG chunk {tag!r} CRC mismatch")
         pos += 12 + length
         if tag == b"IHDR":
+            if len(payload) != 13:
+                raise ValueError(f"PNG IHDR length {len(payload)} != 13")
             ihdr = struct.unpack(">IIBBBBB", payload)
         elif tag == b"PLTE":
             plte = np.frombuffer(payload, dtype=np.uint8).reshape(-1, 3)

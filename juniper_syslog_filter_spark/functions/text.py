@@ -8,8 +8,8 @@ and ``rolling_hash`` execute as Arrow-batched pandas_udf kernels — the
 same treatment as :func:`..operators.dedup.simhash` — because their
 pure-expression forms fold per-token / per-character through
 interpreted higher-order functions (the pattern that made d2/d3
-explode at scale). The ``*_expr`` twins remain the portable spec and
-the source of the DuckDB oracle SQL.
+explode at scale). Their ``*_sql`` DuckDB twins are the spec the
+kernels are tested against.
 """
 
 from __future__ import annotations
@@ -38,11 +38,11 @@ def lang_id(col: Column) -> Column:
     over whitespace tokens; all-zero → 'und'. Ties resolve in the fixed
     order en > de > es > fr (strictly-greater chain, deterministic).
 
-    pandas_udf execution of the :func:`lang_id_expr` /
-    :func:`lang_id_sql` definition: one Arrow batch in, a numpy count
-    matrix (langs × rows) out, argmax with the priority order encoded
-    by iteration order. Null/empty text → 'und' (matches the
-    expression: null counts make every WHEN branch false)."""
+    pandas_udf execution of the :func:`lang_id_sql` definition: one
+    Arrow batch in, a numpy count matrix (langs × rows) out, argmax
+    with the priority order encoded by iteration order. Null/empty
+    text → 'und' (matches the SQL twin: null counts make every WHEN
+    branch false)."""
     order = list(_LANG_ORDER)
     sets = [frozenset(STOPWORDS[lang]) for lang in order]
 
@@ -54,7 +54,7 @@ def lang_id(col: Column) -> Column:
             for k, wset in enumerate(sets):
                 counts[k, i] = sum(tok in wset for tok in toks)
         # argmax returns the FIRST maximal index — exactly the
-        # en > de > es > fr strictly-greater chain of the expression.
+        # en > de > es > fr strictly-greater chain of the SQL twin.
         best = counts.argmax(axis=0)
         out = np.where(
             counts[best, np.arange(n)] > 0,
@@ -64,28 +64,6 @@ def lang_id(col: Column) -> Column:
         return pd.Series(out)
 
     return F.pandas_udf(fn, "string")(col)
-
-
-def lang_id_expr(col: Column) -> Column:
-    """Pure-expression spec of :func:`lang_id` (interpreted HOFs — use
-    the pandas_udf form for execution)."""
-    toks = F.split(col, " ")
-
-    def in_set(words: list[str]):
-        # Single-arg lambda (a 2-arg one is F.filter's (element, index)
-        # form), words bound via closure.
-        wset = F.array(*[F.lit(w) for w in words])
-        return lambda t: F.array_contains(wset, t)
-
-    counts = {
-        lang: F.size(F.filter(toks, in_set(words)))
-        for lang, words in STOPWORDS.items()
-    }
-    best = F.greatest(*counts.values())
-    expr = F.lit("und")
-    for lang in reversed(_LANG_ORDER):
-        expr = F.when((counts[lang] == best) & (best > 0), F.lit(lang)).otherwise(expr)
-    return expr
 
 
 def lang_id_sql(expr: str) -> str:
@@ -117,13 +95,12 @@ def rolling_hash(col: Column) -> Column:
     """Polynomial rolling hash over the character codes of ``col``:
     ``h = fold(chars, 0, (acc, c) -> (acc*31 + ascii(c)) % 1e9+7)``.
 
-    pandas_udf execution of the :func:`rolling_hash_expr` /
-    :func:`rolling_hash_sql` definition. The sequential Horner fold is
-    re-expressed as the closed form ``Σ code_i · 31^(n-1-i) mod p`` so
-    numpy evaluates a whole document in one vector op: code points via
-    a UTF-32 reinterpret (no per-char Python), a shared power table
+    pandas_udf execution of the :func:`rolling_hash_sql` definition.
+    The sequential Horner fold is re-expressed as the closed form
+    ``Σ code_i · 31^(n-1-i) mod p`` so numpy evaluates a whole document
+    in one vector op: code points via a UTF-32 reinterpret (no per-char Python), a shared power table
     grown on demand. Each term is < p ≈ 2^30, so an int64 sum is exact
-    up to ~9·10^9 characters per document. Null → 0 (the expression's
+    up to ~9·10^9 characters per document. Null → 0 (the SQL twin's
     empty-fold seed; datagen text is non-null ASCII).
     """
     def fn(texts: pd.Series) -> pd.Series:
@@ -144,25 +121,6 @@ def rolling_hash(col: Column) -> Column:
         return pd.Series(out)
 
     return F.pandas_udf(fn, "long")(col)
-
-
-def rolling_hash_expr(col: Column) -> Column:
-    """Pure-expression spec of :func:`rolling_hash` (interpreted
-    per-character HOF fold — use the pandas_udf form for execution).
-
-    acc < 1e9+7 and ascii < 256 keep every intermediate < 2^63 — no
-    overflow under ANSI mode, and both engines fold left-to-right over
-    the same character sequence → identical values.
-    """
-    codes = F.transform(
-        F.filter(F.split(col, ""), lambda c: c != ""),
-        lambda c: F.ascii(c).cast("long"),
-    )
-    return F.aggregate(
-        codes,
-        F.lit(0).cast("long"),
-        lambda acc, c: (acc * _BASE + c) % _MOD,
-    )
 
 
 def rolling_hash_sql(expr: str) -> str:
@@ -196,11 +154,6 @@ def bpe_token_count(col: Column) -> Column:
 
 def bpe_token_count_sql(expr: str) -> str:
     return f"len(regexp_extract_all({expr}, '\\w+|[^\\w\\s]'))"
-
-
-def ws_token_count(col: Column) -> Column:
-    """Whitespace token count (the t1 driver query's tokenizer)."""
-    return F.size(F.split(col, " "))
 
 
 # ---------------------------------------------------------------------------
@@ -327,16 +280,16 @@ def winnow_fingerprints(col: Column, k: int = 8, w: int = 8) -> Column:
     guarantees any shared substring of length ≥ ``k + w - 1`` shares a
     selected fingerprint, at ~``2/(w+1)`` selection density.
 
-    Arrow-batched pandas_udf execution of :func:`winnow_expr` (the
-    interpreted-HOF spec would md5/Horner per shingle per doc — the d2
-    failure mode). Vectorized per document: k-gram hashes in O(n) via a
-    scaled prefix-sum of ``c_j·31^(n-1-j) mod p`` rescaled by a modular
-    inverse power table (all < 2^62, exact in int64), window minima via
-    a stride-tricks sliding view, dedup+sort via ``np.unique``. Hash
-    values are IDENTICAL to the per-shingle Horner fold of
-    :func:`rolling_hash_expr` restricted to the shingle, so the twins
-    agree bit-for-bit. Docs with fewer than ``w`` shingles yield an
-    empty array (the expression twin's guard).
+    Arrow-batched pandas_udf execution of the :func:`winnow_sql`
+    definition (an interpreted-HOF form would Horner-fold per shingle
+    per doc — the d2 failure mode). Vectorized per document: k-gram
+    hashes in O(n) via a scaled prefix-sum of ``c_j·31^(n-1-j) mod p``
+    rescaled by a modular inverse power table (all < 2^62, exact in
+    int64), window minima via a stride-tricks sliding view, dedup+sort
+    via ``np.unique``. Hash values are IDENTICAL to the per-shingle Horner fold of
+    :func:`rolling_hash` restricted to the shingle, so the twins agree
+    bit-for-bit. Docs with fewer than ``w`` shingles yield an empty
+    array (the SQL twin's guard).
 
     Scale: map-only (zero shuffle); downstream cross-doc joins on the
     exploded fingerprints are the sub-quadratic passage-dup path.
@@ -380,41 +333,10 @@ def winnow_fingerprints(col: Column, k: int = 8, w: int = 8) -> Column:
     return F.pandas_udf(fn, "array<long>")(col)
 
 
-def winnow_expr(col: Column, k: int = 8, w: int = 8) -> Column:
-    """Pure-expression spec of :func:`winnow_fingerprints` (interpreted
-    HOFs — use the kernel for execution). Shingle ``i``'s hash is the
-    :func:`rolling_hash_expr` Horner fold over ``chars[i, i+k)``; the
-    fingerprints are ``array_sort(array_distinct(`` window minima``))``.
-    The ``m >= w`` guard matters: Spark's ``sequence(1, stop)`` counts
-    DOWN when ``stop < 1`` instead of returning an empty range."""
-    codes = F.transform(
-        F.filter(F.split(col, ""), lambda c: c != ""),
-        lambda c: F.ascii(c).cast("long"),
-    )
-    n = F.size(codes)
-    hashes = F.transform(
-        F.sequence(F.lit(1), n - k + 1),
-        lambda i: F.aggregate(
-            F.slice(codes, i, k),
-            F.lit(0).cast("long"),
-            lambda acc, c: (acc * _BASE + c) % _MOD,
-        ),
-    )
-    m = F.size(hashes)
-    mins = F.transform(
-        F.sequence(F.lit(1), m - w + 1),
-        lambda j: F.array_min(F.slice(hashes, j, w)),
-    )
-    empty = F.array().cast("array<long>")
-    return F.when(
-        (n >= k) & (m >= w), F.array_sort(F.array_distinct(mins))
-    ).otherwise(empty)
-
-
 def winnow_sql(
     table: str, id_expr: str, text_expr: str, k: int = 8, w: int = 8
 ) -> str:
-    """DuckDB twin of :func:`winnow_expr` as a staged query: SELECTs
+    """DuckDB twin of :func:`winnow_fingerprints` as a staged query: SELECTs
     ``(doc_id, fps)`` from ``table``. Each level (char codes, shingle
     hashes, window minima) materializes ONCE per row via CTE columns —
     textually nesting the three levels into one expression re-evaluates

@@ -32,8 +32,7 @@ shingle subtree across the 16 band-row fields, which measured 979 s for
 5k docs at sf0.1 in round 1 (an O(bands×rows×shingles) interpreted blow-
 up). The vectorized kernels below compute the identical md5-based
 definitions (same hex values as the ``*_sql`` DuckDB twins) in a single
-pass over each Arrow batch. The expression builders are kept as the
-portable spec used by tests and oracle generation.
+pass over each Arrow batch; tests check them against those twins.
 """
 
 from __future__ import annotations
@@ -121,24 +120,8 @@ def jaccard_sql(a: str, b: str) -> str:
 # ---------------------------------------------------------------------------
 
 
-def minhash_for_band_row(shingles: Column, band: int, row: int) -> Column:
-    """One min-hash value: min over shingles of md5 with a (band,row)
-    seed prefix. Hex-string min == numeric min of the 128-bit hash, and
-    is engine-identical."""
-    seed = f"{band}:{row}:"
-    return F.array_min(F.transform(shingles, lambda s: F.md5(F.concat(F.lit(seed), s))))
-
-
 def minhash_for_band_row_sql(shingles: str, band: int, row: int) -> str:
     return f"list_min(list_transform({shingles}, s -> md5('{band}:{row}:' || s)))"
-
-
-def band_bucket(shingles: Column, band: int, rows_per_band: int) -> Column:
-    """LSH bucket id for one band: md5 of the concatenated row minhashes."""
-    sig = F.concat_ws(
-        "|", *[minhash_for_band_row(shingles, band, r) for r in range(rows_per_band)]
-    )
-    return F.md5(sig)
 
 
 def band_bucket_sql(shingles: str, band: int, rows_per_band: int) -> str:
@@ -370,27 +353,6 @@ def sig_jaccard_udf():
     return F.pandas_udf(fn, "double")
 
 
-def shingle_jaccard_udf(k: int = 8):
-    """Arrow-vectorized exact Jaccard of char-k shingle sets of two text
-    columns. Pairwise two-arg (text_a, text_b) form for spot checks ONLY
-    — it is NOT compatible with :func:`verify_pairs_jaccard`, whose
-    ``sig_udf`` parameter takes a one-arg text→int64-array fingerprint
-    UDF (:func:`shingle_sig_udf`). For bulk verification use
-    ``verify_pairs_jaccard(df, cand, id, text, shingle_sig_udf(k), t)``.
-    Set math == ``jaccard(char_shingles(a), char_shingles(b))`` (and the
-    :func:`jaccard_sql` twin) exactly."""
-
-    def fn(ta: pd.Series, tb: pd.Series) -> pd.Series:
-        out = np.empty(len(ta), dtype=np.float64)
-        for i, (a, b) in enumerate(zip(ta, tb)):
-            sa = _py_char_shingles(a, k)
-            sb = _py_char_shingles(b, k)
-            out[i] = len(sa & sb) / len(sa | sb)
-        return pd.Series(out)
-
-    return F.pandas_udf(fn, "double")
-
-
 def _py_word_ngrams(text: str, n: int) -> set[str]:
     """Python twin of :func:`word_ngrams` (set form). ``split(col, ' ')``
     keeps empty tokens (Java ``split(re, -1)``), exactly like
@@ -401,24 +363,6 @@ def _py_word_ngrams(text: str, n: int) -> set[str]:
     if len(toks) < n:
         return {" ".join(toks)}
     return {" ".join(toks[i : i + n]) for i in range(len(toks) - n + 1)}
-
-
-def word_ngram_jaccard_udf(n: int = 2):
-    """Arrow-vectorized exact Jaccard of word n-gram sets. Pairwise
-    two-arg (text_a, text_b) form for spot checks ONLY — NOT compatible
-    with :func:`verify_pairs_jaccard` (whose ``sig_udf`` is the one-arg
-    :func:`word_ngram_sig_udf`). Twin of
-    ``jaccard(word_ngrams(a), word_ngrams(b))`` / the SQL builders."""
-
-    def fn(ta: pd.Series, tb: pd.Series) -> pd.Series:
-        out = np.empty(len(ta), dtype=np.float64)
-        for i, (a, b) in enumerate(zip(ta, tb)):
-            sa = _py_word_ngrams(a, n)
-            sb = _py_word_ngrams(b, n)
-            out[i] = len(sa & sb) / len(sa | sb)
-        return pd.Series(out)
-
-    return F.pandas_udf(fn, "double")
 
 
 def verify_pairs_sig(sig: DataFrame, cand: DataFrame, threshold: float) -> DataFrame:
@@ -503,37 +447,11 @@ def minhash_lsh_pairs(
 _HEX = "0123456789abcdef"
 
 
-def _spark_bit(tok: Column, j: int) -> Column:
-    """Bit j (0-based) of the 128-bit md5 of ``tok``, reading hex digit
-    j//4 (1-based position) bit j%4."""
-    digit = F.conv(F.substring(F.md5(tok), j // 4 + 1, 1), 16, 10).cast("int")
-    return F.shiftright(digit, j % 4).bitwiseAND(F.lit(1))
-
-
-def simhash_expr(col: Column, bits: int = 32) -> Column:
-    """Pure-expression SimHash (the portable spec; interpreted HOFs →
-    use :func:`simhash` for execution). Bit j of the result is set iff
-    the majority of tokens have bit j of md5(token) set (ties → 0)."""
-    toks = F.split(col, " ")
-    n = F.size(toks)
-    out = F.lit(0).cast("long")
-
-    def bit_pred(j: int):
-        # Single-arg lambda: a 2-arg lambda would be treated by
-        # F.filter as the (element, index) form.
-        return lambda t: _spark_bit(t, j) == 1
-
-    for j in range(bits):
-        cnt = F.size(F.filter(toks, bit_pred(j)))
-        out = out + F.when(cnt * 2 > n, F.lit(1 << j).cast("long")).otherwise(F.lit(0).cast("long"))
-    return out
-
-
 def simhash(col: Column, bits: int = 32) -> Column:
     """SimHash over whitespace tokens — vectorized pandas-UDF execution
-    of the :func:`simhash_expr` / :func:`simhash_sql` definition: bit j
-    is set iff the majority of tokens have bit j of md5(token) set
-    (ties → 0), where bit j reads hex digit j//4 (1-based), bit j%4.
+    of the :func:`simhash_sql` definition: bit j is set iff the
+    majority of tokens have bit j of md5(token) set (ties → 0), where
+    bit j reads hex digit j//4 (1-based), bit j%4.
 
     Per token the kernel builds a ``bits``-wide pattern whose bit j
     equals that definition: nibble value of hex digit i lands at bits

@@ -1,37 +1,13 @@
-"""Union / repartition operators (SURVEY.md §2.4 U1).
+"""MERGE INTO (upsert) as a dataflow.
 
-The reference's merge phase is UNION ALL + re-slice into ≤800k-row files
-(modules/merge_files.py:22-122). In Spark, union of homogeneous inputs is
-implicit in a multi-path read; the 800k chunking becomes a *write-side*
-property (``maxRecordsPerFile``) so no extra shuffle is spent on it.
+:func:`merge_upsert` replaces matched base rows with their change rows
+and inserts unmatched ones: one left-anti join on the change keys plus
+UNION ALL, so no change payload crosses the shuffle.
 """
 
 from __future__ import annotations
 
-import math
-
 from pyspark.sql import DataFrame
-
-MAX_ROWS_PER_CHUNK = 800_000  # Excel headroom constant (run.py:129)
-
-
-def merge_frames(frames: list[DataFrame]) -> DataFrame:
-    """UNION ALL by name; skips nothing (empty inputs are free in Spark)."""
-    if not frames:
-        raise ValueError("no input frames")
-    out = frames[0]
-    for f in frames[1:]:
-        out = out.unionByName(f)
-    return out
-
-
-def rechunk(df: DataFrame, max_rows: int = MAX_ROWS_PER_CHUNK, approx_count: int | None = None) -> DataFrame:
-    """Fixed-size re-chunking. Prefer write-side ``maxRecordsPerFile``
-    (sinks.writers) — this exists only when a hard partition-count is
-    needed; it costs one round-robin shuffle."""
-    n = approx_count if approx_count is not None else df.count()
-    parts = max(1, math.ceil(n / max_rows))
-    return df.repartition(parts)
 
 
 def merge_upsert(base: DataFrame, changes: DataFrame, key_cols: list[str]) -> DataFrame:

@@ -15,11 +15,3 @@ def reduce_columns(df: DataFrame, keep_columns: list[int]) -> DataFrame:
     if bad:
         raise IndexError(f"keep_columns out of range {bad} for {n} columns")
     return df.select(*[df.columns[i] for i in keep_columns])
-
-
-def select_contract(df: DataFrame, ordered_cols: list[str]) -> DataFrame:
-    """Enforce an exact column-order contract at a sink boundary."""
-    missing = [c for c in ordered_cols if c not in df.columns]
-    if missing:
-        raise ValueError(f"missing contract columns: {missing}")
-    return df.select(*ordered_cols)

@@ -206,16 +206,6 @@ def shard_assign(
     )
 
 
-def shard_assign_sql(id_expr: str, n_shards: int = 8, salt: str = "shuffle:42") -> dict:
-    """DuckDB twins of the :func:`shard_assign` derived columns, keyed
-    ``key``/``shard`` (``pos`` is the same windowed ``row_number``)."""
-    key = f"md5({id_expr}::VARCHAR || ':{salt}')"
-    return {
-        "key": key,
-        "shard": f"{_hex2int_sql(key, 2)} % {n_shards}",
-    }
-
-
 def mixture_upsample(
     df: DataFrame,
     id_col: str,
@@ -253,19 +243,6 @@ def mixture_upsample(
     return df.withColumn(
         "epoch", F.explode(F.sequence(F.lit(1).cast("long"), n_copies))
     )
-
-
-def mixture_upsample_sql(
-    id_expr: str, source_expr: str, salt: str = "mix:42"
-) -> dict:
-    """DuckDB twins for :func:`mixture_upsample`'s derived scalars."""
-    last = f"substr({source_expr}, length({source_expr}), 1)"
-    bucket = _hex2int_sql(f"md5({id_expr}::VARCHAR || ':{salt}')", 2)
-    return {
-        "base": f"(length({source_expr}) + ascii({last})) % 2 + 1",
-        "frac": f"(ascii({last}) * 37 + length({source_expr}) * 11) % 256",
-        "bucket": bucket,
-    }
 
 
 def weighted_sample(

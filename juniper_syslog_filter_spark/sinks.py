@@ -1,5 +1,5 @@
-"""Sinks — S3 (CSV), S4 (styled xlsx), and the partitioned-parquet
-fan-out the north rule's route stage uses.
+"""Sinks — S3 (CSV) and S4 (styled xlsx). The north rule's
+partitioned-parquet fan-out is written by :mod:`.pipeline` itself.
 
 S4 is a dependency-free OOXML writer (:mod:`.xlsx` — stdlib zipfile +
 hand-built sheet/styles XML), replicating modules/export_excel.py's
@@ -8,7 +8,7 @@ formatting contract (bold header, font name/size, per-column width =
 xlsxwriter/openpyxl. It runs driver-side over ≤800k-row chunks — the
 same Excel-limit chunking the reference enforces
 (merge_files.py:96-111) — and is strictly the post-filter last mile;
-the distributed sinks below handle the bulk paths.
+the distributed CSV sink handles the bulk paths.
 """
 
 from __future__ import annotations
@@ -32,22 +32,6 @@ def write_stage_csv(df: DataFrame, path: str, max_records_per_file: int = MAX_XL
         .option("nullValue", "")
         .option("maxRecordsPerFile", max_records_per_file)
         .csv(path)
-    )
-
-
-def write_routed_parquet(
-    df: DataFrame,
-    path: str,
-    partition_cols: list[str],
-    max_records_per_file: int = MAX_XLSX_ROWS,
-) -> None:
-    """The primary fan-out sink: one partitioned write, never N filtered
-    re-scans (pipeline.py uses this shape with batch-keyed overwrite)."""
-    (
-        df.write.mode("overwrite")
-        .partitionBy(*partition_cols)
-        .option("maxRecordsPerFile", max_records_per_file)
-        .parquet(path)
     )
 
 
@@ -82,7 +66,7 @@ def export_xlsx(
         raise ValueError(
             f"export_xlsx input exceeds max_rows={max_rows}: this sink is "
             "the driver-side post-filter last mile; write the bulk path "
-            "with write_stage_csv/write_routed_parquet instead, or raise "
+            "with write_stage_csv instead, or raise "
             "max_rows explicitly."
         )
     # fillna BEFORE astype: astype(str) alone would stringify nulls as

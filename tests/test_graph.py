@@ -2,8 +2,6 @@
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
-
 from juniper_syslog_filter_spark.operators.graph import (
     connected_components,
     dup_clusters,

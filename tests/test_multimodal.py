@@ -7,7 +7,6 @@ from __future__ import annotations
 import hashlib
 
 import pytest
-from pyspark.sql import functions as F
 
 from juniper_syslog_filter_spark.operators import multimodal as M
 
@@ -141,7 +140,12 @@ def test_png_palette_and_error_paths():
     assert out.shape == (2, 2, 3)
     assert tuple(out[0, 0]) == (255, 0, 0) and tuple(out[1, 0]) == (0, 0, 255)
 
-    for bad in (b"nope", P.PNG_MAGIC, P.PNG_MAGIC + b"\x00" * 8):
+    short_ihdr = P.PNG_MAGIC + P._chunk(b"IHDR", b"\x00" * 12)
+    # PLTE payload not a multiple of 3 (RGB triples)
+    ragged_plte = blob.replace(P._chunk(b"PLTE", plte), P._chunk(b"PLTE", plte[:-1]))
+    for bad in (
+        b"nope", P.PNG_MAGIC, P.PNG_MAGIC + b"\x00" * 8, short_ihdr, ragged_plte
+    ):
         with _pytest.raises(ValueError):
             P.decode_png(bad)
     # corrupt one IDAT byte → CRC failure, not silent garbage

@@ -1,18 +1,29 @@
 """Physical-plan audits: assert the optimizations the 100-TB design
 depends on actually appear in the executed plan — partition pruning on
 the route-partitioned sink, parquet filter/column pushdown, broadcast
-(not sort-merge) dim joins, no nested-loop joins in the banded range
-join, and WindowGroupLimit pushdown in the quota sampler. A regression
-in any of these is invisible at test scale but fatal at cluster scale,
-which is exactly why they're pinned here."""
+(not sort-merge) dim joins, the keyword prefilter in the scan stage
+ahead of the Python parse, map-side partial aggregation, no
+nested-loop joins in the banded range join, and WindowGroupLimit
+pushdown in the quota sampler. A regression in any of these is
+invisible at test scale but fatal at cluster scale, which is exactly
+why they're pinned here."""
 
 from __future__ import annotations
 
 import pytest
 from pyspark.sql import functions as F
 
-from juniper_syslog_filter_spark.datagen import load_table, write_pages
+from juniper_syslog_filter_spark.datagen import (
+    device_dim,
+    load_table,
+    severity_dim,
+    write_pages,
+)
 from juniper_syslog_filter_spark.driver_queries import QUERIES
+from juniper_syslog_filter_spark.enrich import enrich
+from juniper_syslog_filter_spark.functions.parse import parse_pages
+from juniper_syslog_filter_spark.operators.dedup import minhash_lsh_pairs
+from juniper_syslog_filter_spark.operators.similarity import ivf_ann_topk
 from juniper_syslog_filter_spark.pipeline import run_pipeline
 
 SF = "/root/testdata/sf0.001"
@@ -52,6 +63,72 @@ def test_parquet_scan_pushdown_and_pruning(spark):
     assert "o_orderdate" not in rs, "column pruning failed"
     pf = plan.split("PushedFilters: [")[1].split("]")[0]
     assert "o_totalprice" in pf, "predicate pushdown failed"
+
+
+def test_equality_filter_pushed_to_scan(spark):
+    q = (
+        load_table(spark, SF, "orders")
+        .filter(F.col("o_orderstatus") == "F")
+        .select("o_orderkey", "o_totalprice")
+    )
+    assert (
+        "PushedFilters: [IsNotNull(o_orderstatus), EqualTo(o_orderstatus,F)]"
+        in _plan(q)
+    )
+
+
+@pytest.fixture(scope="module")
+def keyword_parsed(spark, tmp_path_factory):
+    pages = str(tmp_path_factory.mktemp("kw") / "pages")
+    write_pages(spark, pages, 1000, num_partitions=2)
+    return parse_pages(spark.read.parquet(pages), keyword="RT_IDP_ATTACK")
+
+
+def test_keyword_prefilter_in_scan_stage_before_python(keyword_parsed):
+    """The raw-byte keyword filter runs below MapInPandas, in the same
+    stage as the scan: no page without the keyword reaches Python."""
+    plan = _plan(keyword_parsed)
+    assert plan.startswith("MapInPandas")
+    below = plan.split("MapInPandas", 1)[1]
+    assert "Exchange" not in below
+    flt = next(ln for ln in below.splitlines() if "Filter" in ln)
+    assert "RT_IDP_ATTACK".encode().hex().upper() in flt
+
+
+def test_pipeline_enrich_joins_are_broadcast(spark, keyword_parsed):
+    plan = _plan(enrich(keyword_parsed, severity_dim(spark), device_dim(spark)))
+    assert plan.count("BroadcastHashJoin") == 2
+    assert "SortMergeJoin" not in plan and "ShuffledHashJoin" not in plan
+
+
+def test_enrich_aggregate_is_partial_then_final(spark, keyword_parsed):
+    """The groupBy count combines map-side before its one shuffle."""
+    e = enrich(keyword_parsed, severity_dim(spark), device_dim(spark))
+    plan = _plan(e.groupBy("Severity", "lang").count())
+    above, below = plan.split("Exchange hashpartitioning", 1)
+    assert "functions=[count(1)]" in above
+    assert "functions=[partial_count(1)]" in below
+
+
+def test_minhash_verify_joins_are_hash_based(spark):
+    """Bucket self-join and both signature joins are hash joins; the
+    pair-Jaccard kernel is the Arrow UDF."""
+    docs = load_table(spark, SF, "documents")
+    plan = _plan(minhash_lsh_pairs(docs, "doc_id", "text", threshold=0.5))
+    assert "ArrowEvalPython" in plan
+    assert "BroadcastNestedLoopJoin" not in plan
+    assert "CartesianProduct" not in plan
+
+
+def test_ivf_ann_partial_argmax_and_take_ordered(spark):
+    """IVF ANN: per-vector argmax is a partial (map-side) max_by, the
+    probe join is broadcast, the final top-k is TakeOrderedAndProject."""
+    emb = load_table(spark, SF, "embeddings")
+    qv = emb.filter(F.col("vec_id") == 0).select(F.col("embedding").alias("q_emb"))
+    plan = _plan(ivf_ann_topk(emb.filter(F.col("vec_id") != 0), qv))
+    for op in ("TakeOrderedAndProject", "partial_max_by", "BroadcastHashJoin"):
+        assert op in plan, op
+    assert "SortMergeJoin" not in plan and "CartesianProduct" not in plan
 
 
 def test_enrich_join_is_broadcast_not_sortmerge(spark):

@@ -1,11 +1,12 @@
 """Property-based (hypothesis) twin-equivalence tests.
 
-The engine keeps three definitions of every hot function — pandas_udf
-kernel (execution), Catalyst expression (portable spec), Python re/str
-(driver-local oracle) — and the fixed-corpus tests assert they agree on
-curated examples. These properties assert the same on RANDOM inputs:
-hypothesis drives adversarial strings (weird whitespace runs, stopword
-fragments, malformed IPs, boundary octets) through all twins at once.
+The engine keeps two definitions of every hot function — the executed
+form (a pandas_udf kernel or a Catalyst expression) and its oracle (the
+DuckDB ``*_sql`` twin, or Python re/str on the driver) — and the
+fixed-corpus tests assert they agree on curated examples. These
+properties assert the same on RANDOM inputs: hypothesis drives
+adversarial strings (weird whitespace runs, stopword fragments,
+malformed IPs, boundary octets) through both twins at once.
 
 Each example batches its generated rows into ONE small Spark job;
 max_examples is kept low because a Spark round-trip costs ~0.2 s.
@@ -15,6 +16,8 @@ from __future__ import annotations
 
 import re
 
+import duckdb
+import pandas as pd
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
@@ -26,7 +29,7 @@ from juniper_syslog_filter_spark.functions.ip import (
     classify_ip_expr,
 )
 from juniper_syslog_filter_spark.functions.text import STOPWORDS
-from juniper_syslog_filter_spark.operators.dedup import simhash, simhash_expr
+from juniper_syslog_filter_spark.operators.dedup import simhash, simhash_sql
 
 SETTINGS = dict(
     max_examples=12,
@@ -49,19 +52,21 @@ _text = st.lists(_word, min_size=0, max_size=30).map(" ".join)
 @given(texts=st.lists(_text, min_size=1, max_size=8))
 @settings(**SETTINGS)
 def test_text_kernels_match_expressions(spark, texts):
-    df = spark.createDataFrame([(t,) for t in texts], "t string")
-    rows = df.select(
-        T.lang_id(F.col("t")).alias("k_lang"),
-        T.lang_id_expr(F.col("t")).alias("e_lang"),
-        T.rolling_hash(F.col("t")).alias("k_roll"),
-        T.rolling_hash_expr(F.col("t")).alias("e_roll"),
-        simhash(F.col("t"), 32).alias("k_sim"),
-        simhash_expr(F.col("t"), 32).alias("e_sim"),
-    ).collect()
-    for r in rows:
-        assert r.k_lang == r.e_lang
-        assert r.k_roll == r.e_roll
-        assert r.k_sim == r.e_sim
+    """Each Arrow kernel equals its DuckDB ``*_sql`` twin."""
+    df = spark.createDataFrame(list(enumerate(texts)), "i int, t string")
+    got = df.select(
+        "i",
+        T.lang_id(F.col("t")),
+        T.rolling_hash(F.col("t")),
+        simhash(F.col("t"), 32),
+    ).orderBy("i").collect()
+    con = duckdb.connect()
+    con.register("docs", pd.DataFrame({"i": range(len(texts)), "t": texts}))
+    want = con.execute(
+        f"SELECT i, {T.lang_id_sql('t')}, {T.rolling_hash_sql('t')}, "
+        f"{simhash_sql('t', 32)} FROM docs ORDER BY i"
+    ).fetchall()
+    assert [tuple(r) for r in got] == want
 
 
 # IPv4-shaped and garbage inputs: valid octets, boundary values around

@@ -5,8 +5,6 @@ tests/test_classify_ip.py:121-133)."""
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
-
 from juniper_syslog_filter_spark import stages as S
 
 MSG = (

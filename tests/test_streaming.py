@@ -12,7 +12,6 @@ from juniper_syslog_filter_spark.enrich import enrich
 from juniper_syslog_filter_spark.functions.parse import parse_pages
 from juniper_syslog_filter_spark.streaming import (
     run_stream_once,
-    stream_routed,
     windowed_severity_counts,
 )
 

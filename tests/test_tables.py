@@ -216,7 +216,6 @@ def test_write_table_iceberg_branch_logic_without_jar(spark, monkeypatch):
 
     # a slash path must bypass the Iceberg branch even with the jar
     # "present" — it's a filesystem location, not a catalog identifier
-    import os
     import tempfile
 
     d = tempfile.mkdtemp(prefix="tbl_branch_")

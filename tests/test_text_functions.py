@@ -1,10 +1,13 @@
 """Text-analysis function tests (lang-ID, rolling hash, BPE-ish token
-count) against driver-local Python oracles."""
+count) against driver-local Python oracles and the DuckDB ``*_sql``
+twins."""
 
 from __future__ import annotations
 
 import re
 
+import duckdb
+import pandas as pd
 from pyspark.sql import functions as F
 
 from juniper_syslog_filter_spark.functions import text as T
@@ -45,29 +48,25 @@ def test_rolling_hash_matches_python(spark):
 
 
 def test_kernels_match_expression_spec(spark):
-    """lang_id / rolling_hash execute as pandas_udf kernels; the
-    ``*_expr`` HOF forms remain the portable spec — both must agree on
-    a corpus covering ties, empties, long docs, and und."""
-    rows = [
-        (i, t)
-        for i, t in enumerate(
-            [
-                "the cat and the dog", "der hund ist und", "el que y los",
-                "le et est une", "y et", "", "no stop words here",
-                "und der the a of", "x" * 3000, "mixed the der el le est",
-            ]
-        )
+    """lang_id / rolling_hash execute as pandas_udf kernels; their
+    DuckDB ``*_sql`` twins are the spec — both must agree on a corpus
+    covering ties, empties, long docs, and und."""
+    texts = [
+        "the cat and the dog", "der hund ist und", "el que y los",
+        "le et est une", "y et", "", "no stop words here",
+        "und der the a of", "x" * 3000, "mixed the der el le est",
     ]
-    df = spark.createDataFrame(rows, "id int, t string")
-    out = df.select(
-        T.lang_id(F.col("t")).alias("k_lang"),
-        T.lang_id_expr(F.col("t")).alias("e_lang"),
-        T.rolling_hash(F.col("t")).alias("k_roll"),
-        T.rolling_hash_expr(F.col("t")).alias("e_roll"),
-    ).collect()
-    for r in out:
-        assert r.k_lang == r.e_lang
-        assert r.k_roll == r.e_roll
+    df = spark.createDataFrame(list(enumerate(texts)), "id int, t string")
+    got = df.select(
+        "id", T.lang_id(F.col("t")), T.rolling_hash(F.col("t"))
+    ).orderBy("id").collect()
+    con = duckdb.connect()
+    con.register("docs", pd.DataFrame({"id": range(len(texts)), "t": texts}))
+    want = con.execute(
+        f"SELECT id, {T.lang_id_sql('t')}, {T.rolling_hash_sql('t')} "
+        "FROM docs ORDER BY id"
+    ).fetchall()
+    assert [tuple(r) for r in got] == want
 
 
 def test_bpe_token_count_matches_re(spark):
@@ -79,8 +78,8 @@ def test_bpe_token_count_matches_re(spark):
 
 
 def test_winnow_kernel_matches_expression_and_python(spark):
-    """winnow_fingerprints (Arrow kernel) ≡ winnow_expr (HOF spec) ≡ a
-    pure-python reference, over edge cases: empty, < k chars, exactly
+    """winnow_fingerprints (Arrow kernel) ≡ winnow_sql (DuckDB twin) ≡
+    a pure-python reference, over edge cases: empty, < k chars, exactly
     w shingles, repeated text (minima dedup), ascii + long docs."""
     k, w = 8, 8
     texts = [
@@ -94,14 +93,15 @@ def test_winnow_kernel_matches_expression_and_python(spark):
     df = spark.createDataFrame(
         [(i, t) for i, t in enumerate(texts)], "id int, t string"
     )
-    out = {
-        r.id: (list(r.kern), list(r.spec))
+    kern = {
+        r.id: list(r.kern)
         for r in df.select(
-            "id",
-            T.winnow_fingerprints(F.col("t"), k, w).alias("kern"),
-            T.winnow_expr(F.col("t"), k, w).alias("spec"),
+            "id", T.winnow_fingerprints(F.col("t"), k, w).alias("kern")
         ).collect()
     }
+    con = duckdb.connect()
+    con.register("docs", pd.DataFrame({"id": range(len(texts)), "t": texts}))
+    sql = dict(con.execute(T.winnow_sql("docs", "id", "t", k, w)).fetchall())
 
     def py(t):
         hs = []
@@ -116,8 +116,8 @@ def test_winnow_kernel_matches_expression_and_python(spark):
         return sorted(mins)
 
     for i, t in enumerate(texts):
-        assert out[i][0] == py(t), f"kernel vs python: {t!r}"
-        assert out[i][1] == py(t), f"expr vs python: {t!r}"
+        assert kern[i] == py(t), f"kernel vs python: {t!r}"
+        assert sql[i] == py(t), f"sql twin vs python: {t!r}"
 
 
 # ---------------------------------------------------------------------------

@@ -133,6 +133,22 @@ def test_wc1_matches_documents(spark, sf_dir):
         assert r.warc_ts.minute * 60 + r.warc_ts.second == d.doc_id % 3600
 
 
+def test_wc2_fresh_fixture_reads_every_document_once(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """A freshly built fixture publishes each CDX sidecar under its
+    archive's final name, so the indexed reader finds every record."""
+    import tempfile
+
+    from juniper_syslog_filter_spark.driver_queries import q_wc2_warc_indexed
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    rows = q_wc2_warc_indexed(spark, sf_dir).collect()
+    n_docs = spark.read.parquet(f"{sf_dir}/documents.parquet").count()
+    assert len(rows) == n_docs
+    assert all(r._error == "" for r in rows)
+
+
 # ---------------------------------------------------------------------------
 # CDX index + ranged reads
 # ---------------------------------------------------------------------------
