@@ -2,8 +2,10 @@
 
 ``entry`` runs the flagship parse→classify→filter chain; ``queries`` /
 ``oracle_sql`` expose every implemented operator family (SURVEY.md §2)
-with DuckDB oracle twins. Implementations live in
-``juniper_syslog_filter_spark.driver_queries``.
+with DuckDB oracle twins: copies of the ``@query`` registry in
+``juniper_syslog_filter_spark.driver_queries``, whose family modules
+under ``juniper_syslog_filter_spark/queries/`` declare each query
+beside its oracle.
 """
 
 from __future__ import annotations

@@ -43,20 +43,3 @@ SEVERITY_CLASS = {
     "INFO": "info-band",
     "DEBUG": "info-band",
 }
-
-# Final 12-column output contract, in order (reference:
-# modules/filter_critical.py:16).
-FINAL_COLUMNS = [
-    "Timestamp",
-    "Hostname",
-    "AppName",
-    "routing",
-    "srcIP",
-    "srcIP_type",
-    "dstIP",
-    "dstIP_type",
-    "protocol",
-    "SeverityLevel",
-    "Severity",
-    "Message",
-]

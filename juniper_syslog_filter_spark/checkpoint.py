@@ -70,12 +70,8 @@ class CheckpointTable:
         }
         path = self.path
         if "://" in path and not path.startswith("file:"):
-            schema_str = (
-                "batch_id string, unit string, bytes_in long, rows_parsed long, "
-                "rows_routed long, stage string, committed_at timestamp"
-            )
             data = list(zip(*cols.values()))
-            self.spark.createDataFrame(data, schema_str).coalesce(1).write.mode(
+            self.spark.createDataFrame(data, LOG_SCHEMA).coalesce(1).write.mode(
                 "append"
             ).parquet(path)
             return

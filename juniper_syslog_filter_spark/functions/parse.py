@@ -56,13 +56,6 @@ PARSED_SCHEMA = (
     "SeverityLevel string, Severity string, Message string"
 )
 
-PARSED_COLUMNS = [
-    "url", "warc_ts", "lang",
-    "Timestamp", "Hostname", "AppName", "routing",
-    "srcIP", "dstIP", "protocol", "SeverityLevel", "Severity", "Message",
-]
-
-
 def parse_records_pandas(pdf: pd.DataFrame, keyword: str | None = None) -> pd.DataFrame:
     """The per-batch kernel: html bytes → parsed record columns.
 

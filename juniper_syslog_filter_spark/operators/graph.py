@@ -50,7 +50,7 @@ Scale design (the 100-TB lens):
   (``distinct``) keeps message volume at 2|E|+|V| per round.
 
 Oracle twin: a recursive CTE computing min-reachable-id over the same
-symmetrized edges (see driver_queries ``d6_dup_clusters``).
+symmetrized edges (see ``queries/dedup.q_d6_dup_clusters``).
 """
 
 from __future__ import annotations

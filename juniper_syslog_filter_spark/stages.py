@@ -24,7 +24,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .functions import parse as P
-from .functions.ip import classify_ip_expr
+from .functions.ip import classify_ips
 from .operators.filters import filter_keyword, filter_severity
 from .operators.project import reduce_columns
 
@@ -83,18 +83,7 @@ def stage_split_ip(df: DataFrame) -> DataFrame:
 def stage_classify_ip(df: DataFrame) -> DataFrame:
     """F6/F7 (modules/classify_ip.py:104-206): srcIP_type after srcIP,
     dstIP_type after dstIP."""
-    df = df.withColumn("srcIP_type", classify_ip_expr(F.col("srcIP"))).withColumn(
-        "dstIP_type", classify_ip_expr(F.col("dstIP"))
-    )
-    cols = [c for c in df.columns if c not in ("srcIP_type", "dstIP_type")]
-    out: list[str] = []
-    for c in cols:
-        out.append(c)
-        if c == "srcIP":
-            out.append("srcIP_type")
-        elif c == "dstIP":
-            out.append("dstIP_type")
-    return df.select(*out)
+    return classify_ips(df)
 
 
 def stage_extract_protocol(df: DataFrame) -> DataFrame:

@@ -168,7 +168,7 @@ def sessionize_stream(
 ) -> DataFrame:
     """Custom STATEFUL streaming operator via ``applyInPandasWithState``:
     30-min-gap sessionization per user — the streaming twin of the w1
-    batch query (driver_queries.q_w1_sessionize; same strictly-greater
+    batch query (queries/windows.q_w1_sessionize; same strictly-greater
     microsecond gap test), but emitting full (start, end, n_events)
     session rows as they CLOSE instead of a final per-user count.
 

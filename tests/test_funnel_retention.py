@@ -10,6 +10,7 @@ import datetime as dt
 from pyspark.sql import functions as F
 
 from juniper_syslog_filter_spark import driver_queries as DQ
+from juniper_syslog_filter_spark.queries import windows
 
 SF = "/root/testdata/sf0.001"
 
@@ -19,12 +20,12 @@ def _with_fixture(spark, rows, fn):
     df = df.withColumn("event_id", F.monotonically_increasing_id()).withColumn(
         "value", F.lit(1.0)
     )
-    orig = DQ.load_table
+    orig = windows.load_table
     try:
-        DQ.load_table = lambda spark_, sf_, name: df  # noqa: ARG005
+        windows.load_table = lambda spark_, sf_, name: df  # noqa: ARG005
         return fn()
     finally:
-        DQ.load_table = orig
+        windows.load_table = orig
 
 
 def _t(h):

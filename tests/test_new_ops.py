@@ -834,9 +834,7 @@ def test_hl1_oracle_est_far_from_libm_boundary(spark, sf):
     unlikely."""
     import math
 
-    from juniper_syslog_filter_spark.driver_queries import (
-        q_hl1_hll_distinct,
-    )
+    from juniper_syslog_filter_spark.queries.sketch import q_hl1_hll_distinct
 
     row = q_hl1_hll_distinct(spark, sf).collect()[0]
     m = 1024
@@ -961,8 +959,8 @@ def test_bloom_no_false_negatives_and_matches_reference(spark):
 def test_bloom_null_probe_is_not_member(spark):
     """A NULL probe value reads bloom_hit = FALSE, not SQL NULL — the
     same pin the DuckDB twin applies via COALESCE, so bl1's oracle
-    contract survives a nullable text column (round-3 advice:
-    driver_queries.py:3325)."""
+    contract survives a nullable text column (round-3 advice: the bl1
+    oracle in queries/sketch.py)."""
     from juniper_syslog_filter_spark.operators.sketch import (
         bloom_build,
         bloom_probe,
@@ -1022,7 +1020,7 @@ def test_bloom_probe_is_map_side(spark):
     assert not re.search(r"(?<!Broadcast)Exchange\b", probe_branch), plan[:2000]
 
 
-def test_a7_rank_certificate_on_skewed_values(spark):
+def test_a7_rank_certificate_on_skewed_values(spark, monkeypatch):
     """a7's rank-error certificate must hold on an adversarially skewed
     distribution (99 zeros + a huge outlier per group) where a
     value-tolerance check would be meaningless — the certificate is
@@ -1030,23 +1028,19 @@ def test_a7_rank_certificate_on_skewed_values(spark):
     against numpy's linear interpolation (quantile_cont)."""
     import numpy as np
 
-    from juniper_syslog_filter_spark.driver_queries import (
-        q_a7_approx_percentiles,
-    )
+    from juniper_syslog_filter_spark.queries import relational
 
     rows = [("spike", 0.0)] * 99 + [("spike", 1e12)]
     rows += [("flat", float(i)) for i in range(50)]
     df = spark.createDataFrame(rows, "event_type string, value double")
     df.createOrReplaceTempView("_a7_src")
 
-    import juniper_syslog_filter_spark.driver_queries as dq
-
-    orig = dq.load_table
-    dq.load_table = lambda s, d, t: df  # the query only reads events
-    try:
-        out = {r.event_type: r for r in q_a7_approx_percentiles(spark, "").collect()}
-    finally:
-        dq.load_table = orig
+    # the query only reads events
+    monkeypatch.setattr(relational, "load_table", lambda s, d, t: df)
+    out = {
+        r.event_type: r
+        for r in relational.q_a7_approx_percentiles(spark, "").collect()
+    }
 
     assert out["spike"].ok50 and out["spike"].ok95
     assert out["flat"].ok50 and out["flat"].ok95

@@ -177,27 +177,23 @@ def test_html_to_text_spark_equals_duckdb_twin(spark):
     assert got == want
 
 
-def test_t12_bigram_lm_matches_numpy(spark):
+def test_t12_bigram_lm_matches_numpy(spark, monkeypatch):
     """Interpolated bigram LM score on a tiny constructed corpus,
     cross-checked against a literal numpy/python restatement."""
     import math
 
-    from juniper_syslog_filter_spark import driver_queries as DQ
+    from juniper_syslog_filter_spark.queries import text as TQ
 
     docs = spark.createDataFrame(
         [(0, "a b a b"), (1, "a b c"), (2, "c"), (3, "b a")],
         "doc_id long, text string",
     ).withColumn("lang", F.lit("en")).withColumn("source", F.lit("s")) \
      .withColumn("n_chars", F.length("text"))
-    orig = DQ.load_table
-    try:
-        DQ.load_table = lambda s, sf, name: docs  # noqa: ARG005
-        got = {
-            r.doc_id: (r.n_bigrams, r.lp)
-            for r in DQ.q_t12_bigram_lm(spark, "unused").collect()
-        }
-    finally:
-        DQ.load_table = orig
+    monkeypatch.setattr(TQ, "load_table", lambda s, sf, name: docs)
+    got = {
+        r.doc_id: (r.n_bigrams, r.lp)
+        for r in TQ.q_t12_bigram_lm(spark, "unused").collect()
+    }
 
     # hand model: unigrams a:4 b:4 c:2, T=10, V=3
     uni = {"a": 4, "b": 4, "c": 2}

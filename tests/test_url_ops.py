@@ -1,7 +1,7 @@
 """URL-family driver queries: parse_url host census (h1), URL
 normalization dedup (d8), and keep-latest-per-key compaction (u2).
 Semantics are pinned against the closed-form structure of the
-synthesized url column (driver_queries._URL_SQL): host = doc_id mod 13
+synthesized url column (queries/web._URL_SQL): host = doc_id mod 13
 (case folded), normalized url = (doc_id mod 13, doc_id mod 25), so ids
 exactly 325 apart — and only those — collide after normalization."""
 
@@ -31,19 +31,15 @@ def test_d8_dup_groups_are_exactly_ids_325_apart(spark):
     assert {r["keeper_doc"] for r in rows} == set(range(175))
 
 
-def test_d8_normalization_strips_case_query_fragment_slash(spark):
+def test_d8_normalization_strips_case_query_fragment_slash(spark, monkeypatch):
     df = spark.createDataFrame(
         [(0, "x"), (325, "y")], "doc_id long, source string"
     ).withColumn("n_chars", F.lit(1)).withColumn("lang", F.lit("en"))
     # route the fixture through the same synthesis + census
-    from juniper_syslog_filter_spark import driver_queries as DQ
+    from juniper_syslog_filter_spark.queries import web
 
-    orig = DQ.load_table
-    try:
-        DQ.load_table = lambda spark_, sf_, name: df  # noqa: ARG005
-        out = QUERIES["d8_url_dedup"](spark, SF).collect()
-    finally:
-        DQ.load_table = orig
+    monkeypatch.setattr(web, "load_table", lambda spark_, sf_, name: df)
+    out = QUERIES["d8_url_dedup"](spark, SF).collect()
     assert len(out) == 1
     assert out[0]["norm_url"] == "news0.example.com/article/0"
     assert out[0]["n_dupes"] == 2 and out[0]["keeper_doc"] == 0

@@ -117,7 +117,7 @@ def test_read_warc_bad_gzip_isolated(spark, tmp_path):
 
 def test_wc1_matches_documents(spark, sf_dir):
     """Fixture contract: wc1 rows == documents rows, text byte-exact."""
-    from juniper_syslog_filter_spark.driver_queries import q_wc1_warc_source
+    from juniper_syslog_filter_spark.queries.sources import q_wc1_warc_source
 
     out = {r.url: r for r in q_wc1_warc_source(spark, sf_dir).collect()}
     docs = (
@@ -140,7 +140,7 @@ def test_wc2_fresh_fixture_reads_every_document_once(
     archive's final name, so the indexed reader finds every record."""
     import tempfile
 
-    from juniper_syslog_filter_spark.driver_queries import q_wc2_warc_indexed
+    from juniper_syslog_filter_spark.queries.sources import q_wc2_warc_indexed
 
     monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
     rows = q_wc2_warc_indexed(spark, sf_dir).collect()
