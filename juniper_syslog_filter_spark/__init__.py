@@ -7,8 +7,8 @@ semantics — extract → filter → classify → route → aggregate — as ONE
 Spark plan over Iceberg/parquet tables of Common-Crawl-style web pages,
 designed for 1000-executor / 100 TB scale:
 
-* parse: Arrow-vectorized pandas UDF running Python ``re`` (byte-identical
-  extraction vs the reference's ``pandas.str.extract``)
+* parse: Catalyst regex expressions, Unicode-exact to Python ``re``
+  (byte-identical extraction vs the reference's ``pandas.str.extract``)
 * enrich: broadcast lookup joins (severity class, device metadata)
 * route: explicit repartition + partitioned fan-out writes
 * aggregate: hash groupBy with partial (map-side) aggregation

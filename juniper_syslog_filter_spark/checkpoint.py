@@ -20,10 +20,11 @@ Idempotency protocol (SURVEY §7.4.5):
 
 from __future__ import annotations
 
+import glob
 import hashlib
+import os
 
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.utils import AnalysisException
+from pyspark.sql import SparkSession
 
 LOG_SCHEMA = (
     "batch_id string, unit string, bytes_in long, rows_parsed long, "
@@ -36,16 +37,23 @@ class CheckpointTable:
         self.spark = spark
         self.path = path
 
-    def read_log(self) -> DataFrame | None:
-        try:
-            return self.spark.read.parquet(self.path)
-        except AnalysisException:
-            return None
-
     def completed_units(self) -> set[str]:
-        log = self.read_log()
-        if log is None:
+        """Units with a committed lineage row, read the way :meth:`commit`
+        writes them: driver-side with pyarrow on a local path (no Spark
+        job in the serial tail), else a Spark read that names LOG_SCHEMA
+        so nothing is inferred. A fresh output dir has no log yet."""
+        local = _local_path(self.path)
+        if local is not None:
+            import pyarrow.parquet as pq
+
+            units: set[str] = set()
+            for f in glob.glob(os.path.join(local, "*.parquet")):
+                units.update(pq.read_table(f, columns=["unit"])["unit"].to_pylist())
+            return units
+        fs, p = _fs_path(self.spark, self.path)
+        if not fs.exists(p):
             return set()
+        log = self.spark.read.schema(LOG_SCHEMA).parquet(self.path)
         return {r.unit for r in log.select("unit").distinct().collect()}
 
     def commit(self, rows: list[dict]) -> None:
@@ -68,20 +76,18 @@ class CheckpointTable:
             "stage": [r.get("stage", "pipeline") for r in rows],
             "committed_at": [now] * len(rows),
         }
-        path = self.path
-        if "://" in path and not path.startswith("file:"):
+        local = _local_path(self.path)
+        if local is None:
             data = list(zip(*cols.values()))
             self.spark.createDataFrame(data, LOG_SCHEMA).coalesce(1).write.mode(
                 "append"
-            ).parquet(path)
+            ).parquet(self.path)
             return
-        import os
         import uuid
 
         import pyarrow as pa
         import pyarrow.parquet as pq
 
-        local = path[len("file:"):] if path.startswith("file:") else path
         os.makedirs(local, exist_ok=True)
         table = pa.table(
             {
@@ -93,7 +99,7 @@ class CheckpointTable:
         # Write-temp + rename: the commit must be atomically present or
         # absent (the resume protocol's only invariant). A direct write
         # interrupted mid-flight would leave a truncated commit-*.parquet
-        # that poisons every later read_log(). The dot-prefixed temp name
+        # that poisons every later log read. The dot-prefixed temp name
         # is also invisible to Spark/pyarrow directory listings.
         final = os.path.join(local, f"commit-{uuid.uuid4().hex}.parquet")
         tmp = os.path.join(local, f".{os.path.basename(final)}.tmp")
@@ -109,17 +115,24 @@ def batch_id_for(units: list[str]) -> str:
     return h.hexdigest()[:16]
 
 
-def list_parquet_files(spark: SparkSession, path: str) -> list[tuple[str, int]]:
-    """(file_path, size) for every data file under a parquet table path.
+def _local_path(path: str) -> str | None:
+    """The local filesystem path of ``path``; None on a remote FS."""
+    if path.startswith("file:"):
+        return path[len("file:"):]
+    return None if "://" in path else path
 
-    Uses the Hadoop FS API via the JVM gateway — works for any Hadoop-
-    compatible filesystem (local, HDFS, s3a), not just local disk.
-    """
-    jvm = spark.sparkContext._jvm
-    jsc = spark.sparkContext._jsc
-    conf = jsc.hadoopConfiguration()
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    fs = p.getFileSystem(conf)
+
+def _fs_path(spark: SparkSession, path: str):
+    """(Hadoop FileSystem, Path) for ``path``, via the JVM gateway — works
+    for any Hadoop-compatible filesystem (local, HDFS, s3a), not just
+    local disk."""
+    p = spark.sparkContext._jvm.org.apache.hadoop.fs.Path(path)
+    return p.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration()), p
+
+
+def list_parquet_files(spark: SparkSession, path: str) -> list[tuple[str, int]]:
+    """(file_path, size) for every data file under a parquet table path."""
+    fs, p = _fs_path(spark, path)
     out: list[tuple[str, int]] = []
     it = fs.listFiles(p, True)
     while it.hasNext():

@@ -26,6 +26,7 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 from . import SEVERITIES
 
@@ -283,20 +284,30 @@ def write_pages(spark: SparkSession, path: str, n_rows: int, **kwargs) -> None:
 
 
 def severity_dim(spark: SparkSession) -> DataFrame:
-    """Broadcast enrich dimension (reference: scripts/genarate_logs.py:69-78)."""
+    """Broadcast enrich dimension (reference: scripts/genarate_logs.py:69-78).
+
+    An inline VALUES table: a JVM-local relation, so broadcasting it runs
+    no Python worker (``createDataFrame`` of a list re-serializes through
+    one on every broadcast, every streaming micro-batch included)."""
     from . import SEVERITY_CLASS
 
-    rows = [(name, lvl, SEVERITY_CLASS[name]) for name, lvl in SEVERITIES.items()]
-    return spark.createDataFrame(rows, "severity string, severity_level int, severity_class string")
+    rows = ", ".join(
+        f"('{name}', {lvl}, '{SEVERITY_CLASS[name]}')" for name, lvl in SEVERITIES.items()
+    )
+    return spark.sql(
+        f"SELECT * FROM VALUES {rows} AS t(severity, severity_level, severity_class)"
+    )
 
 
 def device_dim(spark: SparkSession, n_hosts: int = 1000) -> DataFrame:
-    """Device metadata dimension keyed by hostname (north rule enrich)."""
-    rows = [
-        (f"host{i}.example.com", f"site-{i % 10}", f"srx-{i % 3 + 1}00")
-        for i in range(n_hosts)
-    ]
-    return spark.createDataFrame(rows, "hostname string, site string, model string")
+    """Device metadata dimension keyed by hostname (north rule enrich),
+    built from ``spark.range`` in the JVM."""
+    i = F.col("id")
+    return spark.range(n_hosts).select(
+        F.format_string("host%d.example.com", i).alias("hostname"),
+        F.format_string("site-%d", i % 10).alias("site"),
+        F.format_string("srx-%d00", i % 3 + 1).alias("model"),
+    )
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

@@ -3,7 +3,7 @@
 The reference is a single process with zero intra-job parallelism
 (SURVEY.md §4.2); every knob here exists to make the same dataflow scale
 linearly with executors: AQE (runtime coalesce + skew-join split), Arrow
-for the pandas-UDF parse stage, and a shuffle-partition count sized to the
+for the pandas-UDF kernels, and a shuffle-partition count sized to the
 local core count (on a real cluster: 2-3x total executor cores).
 """
 
@@ -77,7 +77,7 @@ def build_session(
         .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        # Arrow transfer for pandas UDFs (the parse stage) — batched
+        # Arrow transfer for pandas UDFs (text, dedup, source kernels) — batched
         # columnar exchange instead of per-row pickling.
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")

@@ -7,8 +7,9 @@ Structured Streaming's file source is its principled replacement:
 exactly-once tracking of processed files in the checkpoint log (the
 streaming analogue of our batch CheckpointTable), automatic discovery of
 new files, and the identical transformation chain — ``parse_pages`` and
-``enrich`` are reused verbatim, since mapInPandas and stream-static
-broadcast joins are both streaming-capable.
+``enrich`` are reused verbatim: the parse is plain Catalyst expressions
+and the enrich stream-static broadcast joins of JVM-built dimensions, so
+no micro-batch starts a Python worker.
 
 Late data: the windowed aggregate applies a watermark on ``warc_ts``;
 closed windows are emitted append-mode (no updates to published rows —

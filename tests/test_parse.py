@@ -145,8 +145,8 @@ def test_expression_variants_match_python_re(spark):
 
 
 def test_narrowing_is_byte_exact_on_adversarial_prefixes(spark):
-    """parse_pages narrows html JVM-side to the first-marker tail before the
-    Arrow transfer (parse.py). The slice must be byte-exact vs a full-page
+    """parse_pages narrows valid html to the first-marker tail before the
+    block regex (parse.py). The slice must be byte-exact vs a full-page
     driver decode for: multibyte valid prefixes, INVALID UTF-8 (incl. a lead
     byte that shadows the marker from the char-boundary walk — the
     is_valid_utf8 fallback path), multiple markers, and marker-in-prefix

@@ -10,7 +10,9 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
+from juniper_syslog_filter_spark.checkpoint import CheckpointTable
 from juniper_syslog_filter_spark.datagen import (
+    device_dim,
     gen_pages_pandas,
     severity_dim,
     write_pages,
@@ -190,3 +192,35 @@ def test_enrich_severity_dim(spark):
     assert got["CRITICAL"] == ("critical-band", 2)
     assert got["DEBUG"] == ("info-band", 7)
     assert got[""] == ("", None)
+
+
+def test_dimension_rows_and_types(spark):
+    """Both enrich dimensions hold exactly the rows, names and types of
+    the driver-side lists they were once created from."""
+    from juniper_syslog_filter_spark import SEVERITIES, SEVERITY_CLASS
+
+    sev = severity_dim(spark)
+    assert sev.dtypes == [
+        ("severity", "string"), ("severity_level", "int"), ("severity_class", "string")
+    ]
+    assert [tuple(r) for r in sev.collect()] == [
+        (name, lvl, SEVERITY_CLASS[name]) for name, lvl in SEVERITIES.items()
+    ]
+    dev = device_dim(spark)
+    assert dev.dtypes == [("hostname", "string"), ("site", "string"), ("model", "string")]
+    assert [tuple(r) for r in dev.collect()] == [
+        (f"host{i}.example.com", f"site-{i % 10}", f"srx-{i % 3 + 1}00") for i in range(1000)
+    ]
+    assert device_dim(spark, 7).count() == 7
+
+
+def test_checkpoint_fresh_dir_is_empty_and_log_round_trips(spark, tmp_path):
+    ckpt = CheckpointTable(spark, str(tmp_path / "_checkpoint"))
+    assert ckpt.completed_units() == set()
+    assert not (tmp_path / "_checkpoint").exists()
+    ckpt.commit([
+        {"batch_id": "b1", "unit": "file:/p/a.parquet", "rows_parsed": 3, "rows_routed": 3},
+        {"batch_id": "b1", "unit": "file:/p/b.parquet"},
+    ])
+    ckpt.commit([{"batch_id": "b2", "unit": "file:/p/c.parquet"}])
+    assert ckpt.completed_units() == {"file:/p/a.parquet", "file:/p/b.parquet", "file:/p/c.parquet"}

@@ -2,11 +2,11 @@
 depends on actually appear in the executed plan — partition pruning on
 the route-partitioned sink, parquet filter/column pushdown, broadcast
 (not sort-merge) dim joins, the keyword prefilter in the scan stage
-ahead of the Python parse, map-side partial aggregation, no
-nested-loop joins in the banded range join, and WindowGroupLimit
-pushdown in the quota sampler. A regression in any of these is
-invisible at test scale but fatal at cluster scale, which is exactly
-why they're pinned here."""
+ahead of the regex parse and no Python in the pipeline, map-side
+partial aggregation, no nested-loop joins in the banded range join, and
+WindowGroupLimit pushdown in the quota sampler. A regression in any of
+these is invisible at test scale but fatal at cluster scale, which is
+exactly why they're pinned here."""
 
 from __future__ import annotations
 
@@ -24,7 +24,7 @@ from juniper_syslog_filter_spark.enrich import enrich
 from juniper_syslog_filter_spark.functions.parse import parse_pages
 from juniper_syslog_filter_spark.operators.dedup import minhash_lsh_pairs
 from juniper_syslog_filter_spark.operators.similarity import ivf_ann_topk
-from juniper_syslog_filter_spark.pipeline import run_pipeline
+from juniper_syslog_filter_spark.pipeline import build_routed, run_pipeline
 
 SF = "/root/testdata/sf0.001"
 
@@ -78,21 +78,45 @@ def test_equality_filter_pushed_to_scan(spark):
 
 
 @pytest.fixture(scope="module")
-def keyword_parsed(spark, tmp_path_factory):
+def kw_pages(spark, tmp_path_factory):
     pages = str(tmp_path_factory.mktemp("kw") / "pages")
     write_pages(spark, pages, 1000, num_partitions=2)
-    return parse_pages(spark.read.parquet(pages), keyword="RT_IDP_ATTACK")
+    return spark.read.parquet(pages)
 
 
-def test_keyword_prefilter_in_scan_stage_before_python(keyword_parsed):
-    """The raw-byte keyword filter runs below MapInPandas, in the same
-    stage as the scan: no page without the keyword reaches Python."""
+@pytest.fixture(scope="module")
+def keyword_parsed(kw_pages):
+    return parse_pages(kw_pages, keyword="RT_IDP_ATTACK")
+
+
+def _python_nodes(plan: str) -> list[str]:
+    return [
+        ln for ln in plan.splitlines()
+        if "Python" in ln or "InPandas" in ln or "InArrow" in ln
+    ]
+
+
+def test_parse_and_enrich_plans_run_no_python(spark, kw_pages, keyword_parsed):
+    """The parse is one map-only JVM stage: no Python-eval node, and the
+    raw-byte keyword filter sits in the scan stage below the first regexp,
+    so no page without the keyword is decoded. The enrich broadcasts
+    read JVM-built dimensions, not a Python-serialized ExistingRDD."""
     plan = _plan(keyword_parsed)
-    assert plan.startswith("MapInPandas")
-    below = plan.split("MapInPandas", 1)[1]
-    assert "Exchange" not in below
-    flt = next(ln for ln in below.splitlines() if "Filter" in ln)
-    assert "RT_IDP_ATTACK".encode().hex().upper() in flt
+    assert _python_nodes(plan) == []
+    assert "Exchange" not in plan
+    lines = plan.splitlines()
+    lowest_regexp = max(i for i, ln in enumerate(lines) if "regexp_extract" in ln)
+    flt = next(
+        i for i, ln in enumerate(lines) if "RT_IDP_ATTACK".encode().hex().upper() in ln
+    )
+    assert flt > lowest_regexp and "Filter" in lines[flt]
+    assert lines[flt].lstrip(" +-").startswith("*(1)")
+    assert "FileScan parquet" in "\n".join(lines[flt:])
+
+    routed = _plan(build_routed(spark, kw_pages, "RT_IDP_ATTACK", "CRITICAL"))
+    assert _python_nodes(routed) == []
+    assert routed.count("BroadcastExchange") == 2
+    assert "Scan ExistingRDD" not in routed
 
 
 def test_pipeline_enrich_joins_are_broadcast(spark, keyword_parsed):

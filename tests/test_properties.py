@@ -18,7 +18,8 @@ import re
 
 import duckdb
 import pandas as pd
-from hypothesis import HealthCheck, given, settings
+import pytest
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
@@ -95,24 +96,76 @@ def test_ip_classifier_expr_matches_python(spark, ips):
         assert r.cls == classify_ip_address(r.ip), repr(r.ip)
 
 
-# Syslog-ish messages: grammar fragments permuted with noise so the
-# extraction regexes see matches, near-misses, and absent fields.
+@pytest.fixture(scope="module")
+def unicode_gap(spark) -> frozenset[str]:
+    r"""Code points Python ``re`` counts as ``\w`` or ``\d`` but this JVM's
+    respelled classes do not: the Unicode-version gap documented in
+    parse.py, derived from the running JVM rather than hard-coded."""
+    chars = [chr(c) for c in range(0x110000) if not 0xD800 <= c <= 0xDFFF]
+    gap: set[str] = set()
+    for cls in (r"\w", r"\d"):
+        py = re.compile(cls)
+        mine = pd.DataFrame({"c": [c for c in chars if py.fullmatch(c)]})
+        jvm = f"^{P._jvm_pattern(cls)}$"
+        df = spark.createDataFrame(mine)
+        gap |= {r.c for r in df.filter(~F.col("c").rlike(jvm)).collect()}
+    return frozenset(gap)
+
+
+def test_unicode_gap_is_unassigned_in_the_jvm(spark, unicode_gap):
+    """Every fenced code point is one the JVM's Unicode tables do not
+    assign at all (JDK 17: Unicode 13.0; Python 3.11: 14.0), so the gap is
+    a table version, not a misspelled class."""
+    df = spark.createDataFrame(pd.DataFrame({"c": sorted(unicode_gap)}, dtype=object), "c string")
+    assert df.filter(~F.col("c").rlike(r"^\p{Cn}$")).count() == 0
+
+
+def _fence(s: str, gap: frozenset[str]) -> str:
+    return "".join(c for c in s if c not in gap)
+
+
+# Characters where Python ``re`` and java.util.regex part most easily:
+# non-ASCII decimal digits (Arabic-Indic U+0663, Devanagari, fullwidth),
+# numbers that are \w but not \d (superscript U+00B2), Unicode spaces
+# (U+2003, U+3000, U+00A0, NEL U+0085), the separators only Python counts
+# as \s (U+001C-U+001F), non-ASCII letters — plus any code point at all.
+_TRICKY = "٣१１²\u2003\u3000\xa0\u0085\x1c\x1fаé_\t\n"
+_uchar = st.one_of(st.sampled_from(_TRICKY), st.characters(exclude_categories=("Cs",)))
+_digits = st.text(st.one_of(st.sampled_from("0123456789"), _uchar), min_size=1, max_size=3)
+_ws = st.text(st.sampled_from(" \u2003\x1c\x85\t\xa0"), max_size=2)
+_ip = st.lists(_digits, min_size=4, max_size=4).map(".".join)
+_route = st.tuples(_ip, _digits, _ws, _ws, _ip, _digits).map(
+    lambda t: f"{t[0]}/{t[1]}{t[2]}>{t[3]}{t[4]}/{t[5]}"
+)
+_uword = st.text(st.one_of(st.sampled_from("tcpCRIT019_"), _uchar), max_size=4)
+# Syslog-ish messages: grammar fragments over any code point, permuted with
+# noise, so the extraction regexes see matches, near-misses and absent fields.
 _frag = st.one_of(
-    st.tuples(_octet, _octet, _octet, _octet, _octet, _octet, _octet, _octet).map(
-        lambda t: f"{t[0]}.{t[1]}.{t[2]}.{t[3]} > {t[4]}.{t[5]}.{t[6]}.{t[7]}"
-    ),
-    st.sampled_from(["TCP", "UDP", "ICMP", "protocol TCP", "protocol-id: 6"]),
-    st.sampled_from(
-        ["severity 5", "severity CRITICAL", "CRITICAL", "WARNING", "INFO"]
-    ),
-    st.text(alphabet="abcdef0123456789 .>:-", min_size=0, max_size=12),
+    _route,
+    _uword.map(lambda w: f"protocol={w}"),
+    _digits.map(lambda d: f"SeverityLevel={d}"),
+    _uword.map(lambda w: f"Severity={w}"),
+    st.text(st.characters(exclude_categories=("Cs",)), max_size=8),
 )
 _msg = st.lists(_frag, min_size=0, max_size=6).map(" ".join)
 
+# Reference behaviours the ASCII-only JVM patterns got wrong: an
+# Arabic-Indic digit, a Cyrillic letter inside \w+, an em-space around
+# ">", a superscript digit (\w, not \d), NEL and U+001C as \s.
+_UNICODE_CASES = [
+    "10.0.0.٣/5 > 1.2.3.4/80 protocol=tcp SeverityLevel=٣ Severity=CRIT",
+    "protocol=tаp Severity=жX",
+    "1.2.3.4/5\u2003>\u20036.7.8.9/10",
+    "protocol=x² SeverityLevel=² Severity=²",
+    "1.2.3.4/5\x85>\x1c6.7.8.9/10",
+]
+
 
 @given(msgs=st.lists(_msg, min_size=1, max_size=10))
+@example(msgs=_UNICODE_CASES)
 @settings(**SETTINGS)
-def test_parse_exprs_match_python_re(spark, msgs):
+def test_parse_exprs_match_python_re(spark, unicode_gap, msgs):
+    msgs = [_fence(m, unicode_gap) for m in msgs]
     df = spark.createDataFrame([(m,) for m in msgs], "Message string")
     src, dst = P.split_ip_exprs(P.extract_routing_expr(F.col("Message")))
     rows = df.select(
@@ -131,11 +184,76 @@ def test_parse_exprs_match_python_re(spark, msgs):
         assert r.srcIP == (m.group(1) if m else "")
         assert r.dstIP == (m.group(2) if m else "")
         pm = re.search(P.PROTOCOL_PATTERN, r.Message)
-        assert r.protocol == (pm.group(1) if pm else "")
+        assert r.protocol == (pm.group(1) if pm else ""), repr(r.Message)
         lm = re.search(P.SEVERITY_LEVEL_PATTERN, r.Message)
-        assert r.lvl == (lm.group(1) if lm else "")
+        assert r.lvl == (lm.group(1) if lm else ""), repr(r.Message)
         sm = re.search(P.SEVERITY_PATTERN, r.Message)
-        assert r.sev == (sm.group(1) if sm else "")
+        assert r.sev == (sm.group(1) if sm else ""), repr(r.Message)
+
+
+# Raw html bytes: log blocks whose head fields and message range over any
+# code point, stray markers and "</pre>", and invalid UTF-8 (lone
+# continuation, truncated sequences, an encoded surrogate, overlong and
+# out-of-range forms) anywhere, including right before a marker.
+_MARK = P.LOG_BLOCK_MARKER.encode()
+_BAD_UTF8 = [b"\x80", b"\xff", b"\xc3", b"\xe2\x82", b"\xf0\x9f\x98", b"\xed\xa0\x80",
+             b"\xc0\xaf", b"\xf4\x90\x80\x80"]
+_head = st.text(st.one_of(st.sampled_from("abT019:-"), _uchar), max_size=4)
+_block = st.tuples(_head, _head, _head, _msg).map(lambda t: " ".join(t).encode())
+_piece = st.one_of(
+    st.sampled_from([_MARK, b"</pre>", b" ", b"<", b"RT_IDP_ATTACK", *_BAD_UTF8]),
+    st.binary(max_size=6),
+    _block,
+    _msg.map(str.encode),
+)
+_junk = st.lists(_piece, max_size=6).map(b"".join)
+_html = st.one_of(
+    _junk,
+    st.tuples(_junk, _block, _junk).map(lambda t: t[0] + _MARK + t[1] + b"</pre>" + t[2]),
+)
+
+
+def _fence_bytes(b: bytes, gap: frozenset[str]) -> bytes:
+    pat = re.compile(b"|".join(re.escape(c.encode()) for c in sorted(gap)) or b"(?!)")
+    while True:
+        out = pat.sub(b"", b)
+        if out == b:
+            return out
+        b = out
+
+
+@given(
+    htmls=st.lists(_html, min_size=1, max_size=8),
+    keyword=st.sampled_from([None, "RT_IDP_ATTACK", "٣", "a", "�"]),
+)
+@example(
+    htmls=[_MARK + f"t h a {m}".encode() + b"</pre>" for m in _UNICODE_CASES]
+    + [b"\xff" + _MARK + b"t\xe2\x80\x83x h a m</pre>", _MARK + b"t h a \xed\xa0\x80</pre>"],
+    keyword=None,
+)
+@example(htmls=[_MARK + b"t h a \xff</pre>", _MARK + b"t h a \xef\xbf\xbd</pre>"], keyword="�")
+@settings(**SETTINGS)
+def test_parse_pages_matches_pandas_oracle(spark, unicode_gap, htmls, keyword):
+    """parse_pages (the one JVM parse) equals the pandas/Python-re oracle,
+    row for row and byte for byte, on arbitrary html bytes."""
+    pdf = pd.DataFrame(
+        {
+            "url": [f"u{i}" for i in range(len(htmls))],
+            "warc_ts": pd.Timestamp("2025-04-28T01:02:03"),
+            "html": [_fence_bytes(h, unicode_gap) for h in htmls],
+            "text": "",
+            "lang": "en",
+        }
+    )
+    cols = [
+        "url", "lang", "Timestamp", "Hostname", "AppName", "routing", "srcIP",
+        "dstIP", "protocol", "SeverityLevel", "Severity", "Message",
+    ]
+    got = P.parse_pages(spark.createDataFrame(pdf), keyword=keyword)
+    want = P.parse_records_pandas(pdf, keyword=keyword)
+    assert sorted(tuple(r) for r in got.select(*cols).collect()) == sorted(
+        map(tuple, want[cols].values.tolist())
+    )
 
 
 # ---------------------------------------------------------------------------
