@@ -83,9 +83,9 @@ def main(argv: list[str] | None = None) -> int:
         print(json.dumps({"cmd": "gen", "rows": args.rows, "out": args.out, "sec": round(time.time() - t0, 2)}))
     elif args.cmd == "stage":
         from .sinks import write_stage_csv
-        from .sources.csv_source import read_stage_csv_auto
+        from .sources.csv_source import read_stage_csv
 
-        df = read_stage_csv_auto(spark, args.input)
+        df = read_stage_csv(spark, args.input)
         fn = STAGES[args.name]
         kwargs = {}
         if args.name == "filter-keyword":
@@ -107,9 +107,9 @@ def main(argv: list[str] | None = None) -> int:
         print(json.dumps({"cmd": "extract", "out": args.out, "sec": round(time.time() - t0, 2)}))
     elif args.cmd == "export-xlsx":
         from .sinks import export_xlsx
-        from .sources.csv_source import read_stage_csv_auto
+        from .sources.csv_source import read_stage_csv
 
-        written = export_xlsx(read_stage_csv_auto(spark, args.input), args.out)
+        written = export_xlsx(read_stage_csv(spark, args.input), args.out)
         print(json.dumps({"cmd": "export-xlsx", "files": written, "sec": round(time.time() - t0, 2)}))
     else:
         from .pipeline import run_pipeline

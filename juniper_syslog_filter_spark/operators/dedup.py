@@ -509,29 +509,26 @@ def simhash_hamming_pairs(
     text_col: str,
     bits: int = 32,
     n_bands: int = 4,
-    max_hamming: int | None = None,
     max_bucket: int | None = 1000,
 ) -> DataFrame:
     """Near-dup pairs by SimHash banding: (id_a, id_b, hamming) for every
-    pair whose ``bits``-bit simhash differs in at most ``max_hamming``
-    positions (default ``n_bands - 1``).
+    pair whose ``bits``-bit simhash differs in at most ``n_bands - 1``
+    positions.
 
-    EXACT, not approximate, at the default threshold: splitting the
-    fingerprint into ``n_bands`` equal bands, two hashes within hamming
-    distance ``n_bands - 1`` must agree on at least one whole band
-    (pigeonhole), so the band-equality self-join recalls every
-    qualifying pair — the standard sub-quadratic simhash dedup dataflow
-    (Manku et al., WWW'07, "Detecting Near-Duplicates for Web
-    Crawling"). Candidates are Σ bucket² per band instead of n²;
-    ``max_bucket`` drops degenerate buckets (same skew guard, and same
-    recall caveat, as :func:`lsh_candidate_pairs`). The signature table
-    is eagerly materialized for the same 3-subtree-race reason
-    documented there; at real scale it is a stored artifact.
+    EXACT, not approximate: splitting the fingerprint into ``n_bands``
+    equal bands, two hashes within hamming distance ``n_bands - 1`` must
+    agree on at least one whole band (pigeonhole), so the band-equality
+    self-join recalls every qualifying pair — the standard sub-quadratic
+    simhash dedup dataflow (Manku et al., WWW'07, "Detecting
+    Near-Duplicates for Web Crawling"). Candidates are Σ bucket² per
+    band instead of n²; ``max_bucket`` drops degenerate buckets (same
+    skew guard, and same recall caveat, as :func:`lsh_candidate_pairs`).
+    The signature table is eagerly materialized for the same
+    3-subtree-race reason documented there; at real scale it is a stored
+    artifact.
     """
     if bits % n_bands != 0:
         raise ValueError("bits must divide evenly into n_bands")
-    if max_hamming is None:
-        max_hamming = n_bands - 1
     band_bits = bits // n_bands
     mask = (1 << band_bits) - 1
     s = df.select(
@@ -578,7 +575,7 @@ def simhash_hamming_pairs(
         "id_a",
         "id_b",
         hamming64(F.col("sh_a"), F.col("sh_b")).cast("int").alias("hamming"),
-    ).filter(F.col("hamming") <= max_hamming)
+    ).filter(F.col("hamming") <= n_bands - 1)
 
 
 # ---------------------------------------------------------------------------
@@ -697,7 +694,6 @@ def incremental_lsh_candidates(
     batch_buckets: DataFrame,
     store_buckets: DataFrame,
     max_bucket: int | None = 1000,
-    materialize: bool = True,
 ) -> DataFrame:
     """Near-dup candidate pairs for a NEW ingest batch against a stored
     band-bucket table — the MinHash twin of
@@ -719,12 +715,11 @@ def incremental_lsh_candidates(
     probe join is storage-aligned; per-bucket store counts are a
     maintained aggregate there, not recomputed (here they cost one
     count over the two bucket tables). Both inputs are eagerly
-    materialized by default for the same 3-way plan-reuse race
-    documented in :func:`lsh_candidate_pairs`.
+    materialized for the same 3-way plan-reuse race documented in
+    :func:`lsh_candidate_pairs`.
     """
-    if materialize:
-        batch_buckets = batch_buckets.localCheckpoint(eager=True)
-        store_buckets = store_buckets.localCheckpoint(eager=True)
+    batch_buckets = batch_buckets.localCheckpoint(eager=True)
+    store_buckets = store_buckets.localCheckpoint(eager=True)
     id_col = [c for c in batch_buckets.columns if c not in ("band", "bucket")][0]
     if max_bucket is not None:
         sizes = (
@@ -820,7 +815,6 @@ def exact_substring_spans(
     k: int = 8,
     min_len: int = 12,
     max_docs_per_gram: int = 20,
-    hash_grams: bool = False,
 ) -> DataFrame:
     """Exact any-offset duplicate-span detection (the Lee et al.
     ACL'22 "exact substring" granularity): for every unordered doc pair,
@@ -848,18 +842,9 @@ def exact_substring_spans(
 
     Scale: one gram-keyed shuffle chain (count → cap-join → pair-join,
     same partitioning reused), then one window + partial-agg shuffle
-    sized to the MATCH set, never the corpus. With the default
-    ``hash_grams=False`` the join keys are the gram strings themselves
-    — collision-free, hence "exact" with no verify pass — and a
-    ~50-byte key crosses every shuffle. ``hash_grams=True`` is the
-    100-TB form: each gram is dictionary-encoded to a 128-bit key (two
-    independent ``xxhash64`` lanes) BEFORE any shuffle, so the df
-    census, the cap join, and the pair self-join all ship 16-byte
-    fixed-width keys; correctness is a collision bound rather than a
-    recheck — at 10¹³ corpus grams the expected number of colliding
-    128-bit pairs is ≈ (10¹³)²/2 · 2⁻¹²⁸ ≈ 10⁻¹³, and a collision can
-    only ADD a spurious k-gram match on one diagonal (never drop a real
-    one), so both variants are pinned equal by pytest. Output:
+    sized to the MATCH set, never the corpus. The join keys are the gram
+    strings themselves — collision-free, hence "exact" with no verify
+    pass — so a ~50-byte key crosses every shuffle. Output:
     ``(doc_a, doc_b, a_start, b_start, span_words)``, 0-based word
     offsets.
     """
@@ -878,17 +863,6 @@ def exact_substring_spans(
         )
         .select("doc_id", F.col("p").cast("long").alias("pos"), "gram")
     )
-    if hash_grams:
-        # encode once, before any shuffle; the string never leaves the
-        # scan stage
-        grams = grams.select(
-            "doc_id",
-            "pos",
-            F.struct(
-                F.xxhash64("gram").alias("h1"),
-                F.xxhash64("gram", F.lit("jsf:gram2")).alias("h2"),
-            ).alias("gram"),
-        )
     keep = (
         grams.groupBy("gram")
         .agg(F.count_distinct("doc_id").alias("_df"))

@@ -19,11 +19,8 @@ pushdown rewrites ``row_number() <= k`` into ``WindowGroupLimit
 (Partial)`` BEFORE the shuffle (verified in this plan), so each map
 task ships at most k rows per group and the reducer sees ≤ k × #maps
 rows regardless of group size — the local-cap-then-global-cap shape of
-TakeOrdered, inserted by the optimizer. ``two_phase=True`` adds an
-explicit salted pre-rank ((group, hash(id) % n_salts) window) achieving
-the same bound manually; it costs one extra shuffle, so it is OFF by
-default and exists for engines/window predicates the pushdown rule
-doesn't cover (e.g. rank over non-limit predicates).
+TakeOrdered, inserted by the optimizer. So ``group_quota`` is one
+window and one shuffle; ``tests/test_plans.py`` pins the pushdown.
 """
 
 from __future__ import annotations
@@ -38,28 +35,10 @@ def _order_key(id_col: str):
     return F.md5(F.col(id_col).cast("string").cast("binary"))
 
 
-def group_quota(
-    df: DataFrame,
-    group_col: str,
-    id_col: str,
-    k: int,
-    two_phase: bool = False,
-    n_salts: int = 64,
-) -> DataFrame:
+def group_quota(df: DataFrame, group_col: str, id_col: str, k: int) -> DataFrame:
     """At most ``k`` rows per ``group_col`` value, deterministically
     sampled; adds ``rk`` (1-based rank within the group, long)."""
-    key = _order_key(id_col)
-    if two_phase:
-        salt = F.pmod(F.hash(F.col(id_col)), F.lit(n_salts))
-        local = Window.partitionBy(F.col(group_col), salt).orderBy(
-            key, F.col(id_col)
-        )
-        df = (
-            df.withColumn("_lrk", F.row_number().over(local))
-            .filter(F.col("_lrk") <= k)
-            .drop("_lrk")
-        )
-    w = Window.partitionBy(group_col).orderBy(key, F.col(id_col))
+    w = Window.partitionBy(group_col).orderBy(_order_key(id_col), F.col(id_col))
     return df.withColumn("rk", F.row_number().over(w).cast("long")).filter(
         F.col("rk") <= k
     )

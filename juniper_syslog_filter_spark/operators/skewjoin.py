@@ -49,17 +49,16 @@ def salted_join(
     entropy_col: str,
     n_salts: int = 8,
     how: str = "inner",
-    force_shuffle: bool = True,
 ) -> DataFrame:
     """Join ``fact`` to ``dim`` on ``on`` with the hot keys spread over
     ``n_salts`` shuffle partitions.
 
     ``entropy_col``: a fact column that varies within a key (row id,
-    timestamp) — the deterministic salt source. ``force_shuffle`` pins a
-    shuffle-hash join; leave it True in tests/demos (a tiny dim would
-    otherwise be auto-broadcast, which needs no salting and would make
-    the demonstration vacuous) and on real skewed-vs-big-dim workloads
-    it is what you would hit anyway once the dim exceeds the broadcast
+    timestamp) — the deterministic salt source. The dim side always
+    carries a ``shuffle_hash`` hint: a tiny dim would otherwise be
+    auto-broadcast, which needs no salting and would make the
+    demonstration vacuous, and on real skewed-vs-big-dim workloads it is
+    what you would hit anyway once the dim exceeds the broadcast
     threshold.
     """
     keys = [on] if isinstance(on, str) else list(on)
@@ -70,7 +69,5 @@ def salted_join(
     d = dim.withColumn(
         SALT_COL,
         F.explode(F.array(*[F.lit(i) for i in range(n_salts)])),
-    )
-    if force_shuffle:
-        d = d.hint("shuffle_hash")
+    ).hint("shuffle_hash")
     return f.join(d, keys + [SALT_COL], how).drop(SALT_COL)

@@ -33,14 +33,17 @@ def _stream_session(spark, n: int = 8):
 
     The streaming plan must be BUILT on this session (readStream and
     any static join side); the finished parquet output can be read
-    back on the caller's session."""
+    back on the caller's session.
+
+    Session-level confs are not inherited by ``newSession()``, so every
+    runtime-modifiable conf of the caller is copied (the time zone, for
+    one, matters to st3's window/timestamp_ntz round-trip); only the
+    shuffle width then differs. The session is not stopped: it shares
+    the caller's SparkContext, and ``stop()`` on it would stop that."""
     s = spark.newSession()
-    # session-level confs are not inherited by newSession(); the tz
-    # matters for st3's window/timestamp_ntz round-trip.
-    s.conf.set(
-        "spark.sql.session.timeZone",
-        spark.conf.get("spark.sql.session.timeZone"),
-    )
+    for key, value in spark.conf.getAll.items():
+        if spark.conf.isModifiable(key):
+            s.conf.set(key, value)
     s.conf.set("spark.sql.shuffle.partitions", str(n))
     return s
 

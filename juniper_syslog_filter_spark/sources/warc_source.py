@@ -299,7 +299,6 @@ def write_warc_file(
     records: list[bytes],
     gzip_per_record: bool = True,
     warcinfo: bool = True,
-    cdx: bool = True,
 ) -> None:
     """Concatenate records into one archive. ``gzip_per_record`` uses
     the Common Crawl layout (one gzip member per record; ``mtime=0`` and
@@ -307,7 +306,7 @@ def write_warc_file(
     fixture determinism). A leading ``warcinfo`` record mirrors real
     archives.
 
-    ``cdx`` writes the ``<path>.cdx`` offset index alongside (one
+    The ``<path>.cdx`` offset index is written alongside (one
     ``offset length`` line per gzip member / raw record, in file
     order) — the Common Crawl CDX idea reduced to what ranged reads
     need. :func:`read_warc_indexed` consumes it for record-level
@@ -327,9 +326,8 @@ def write_warc_file(
             fh.write(blob)
             lines.append(f"{offset} {len(blob)}")
             offset += len(blob)
-    if cdx:
-        with open(f"{path}.cdx", "w", encoding="ascii") as fh:
-            fh.write("\n".join(lines) + "\n")
+    with open(f"{path}.cdx", "w", encoding="ascii") as fh:
+        fh.write("\n".join(lines) + "\n")
 
 
 def read_warc_indexed(

@@ -29,13 +29,13 @@ from .operators.filters import filter_keyword, filter_severity
 from .operators.project import reduce_columns
 
 
-def _insert_before(cols: list[str], new: list[str], anchor: str = "Message") -> list[str]:
+def _insert_before(cols: list[str], new: list[str]) -> list[str]:
     """Reference insertion rule: new columns go immediately before the
-    anchor column (modules/extract_routing.py:89-95 et al.); if the
-    anchor is absent they append."""
+    ``Message`` column (modules/extract_routing.py:89-95 et al.); if
+    ``Message`` is absent they append."""
     out = [c for c in cols if c not in new]
-    if anchor in out:
-        i = out.index(anchor)
+    if "Message" in out:
+        i = out.index("Message")
         return out[:i] + new + out[i:]
     return out + new
 

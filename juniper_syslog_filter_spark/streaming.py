@@ -6,20 +6,20 @@ delete loop (run.py:75-103) — a hand-rolled at-most-once file queue.
 Structured Streaming's file source is its principled replacement:
 exactly-once tracking of processed files in the checkpoint log (the
 streaming analogue of our batch CheckpointTable), automatic discovery of
-new files, and the identical transformation chain — ``parse_pages`` and
-``enrich`` are reused verbatim: the parse is plain Catalyst expressions
-and the enrich stream-static broadcast joins of JVM-built dimensions, so
-no micro-batch starts a Python worker.
+new files, and the identical transformation chain — the batch
+``pipeline.build_routed`` is reused verbatim: the parse is plain
+Catalyst expressions and the enrich stream-static broadcast joins of
+JVM-built dimensions, so no micro-batch starts a Python worker.
 
 Late data: the windowed aggregate applies a watermark on ``warc_ts``;
 closed windows are emitted append-mode (no updates to published rows —
 what a downstream Iceberg sink needs).
 
-Scale notes: the file source lists incrementally (maxFilesPerTrigger
-bounds micro-batch size → bounded executor memory at any input rate);
-state for the windowed agg is per (window, Severity, lang) — tiny. The
-fan-out parquet sink partitions by the same route keys as the batch
-path.
+Scale notes: the file source lists incrementally and each drain runs
+with ``availableNow``, so a drain processes exactly the files that
+arrived since the last one; state for the windowed agg is per (window,
+Severity, lang) — tiny. The fan-out parquet sink partitions by the
+same route keys as the batch path.
 """
 
 from __future__ import annotations
@@ -32,38 +32,13 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from .datagen import PAGES_SCHEMA, device_dim, severity_dim
-from .enrich import enrich
-from .functions.parse import parse_pages
-from .pipeline import ROUTE_KEYS
+from .datagen import PAGES_SCHEMA
+from .pipeline import ROUTE_KEYS, build_routed
 
 
-def read_pages_stream(
-    spark: SparkSession,
-    pages_path: str,
-    max_files_per_trigger: int | None = None,
-) -> DataFrame:
+def read_pages_stream(spark: SparkSession, pages_path: str) -> DataFrame:
     """Streaming scan of a pages directory (parquet file source)."""
-    reader = spark.readStream.schema(PAGES_SCHEMA)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    return reader.parquet(pages_path)
-
-
-def stream_routed(
-    spark: SparkSession,
-    pages: DataFrame,
-    keyword: str | None = None,
-    severity_filter: str | None = None,
-) -> DataFrame:
-    """parse→enrich over a streaming pages frame — same operators as the
-    batch path (pipeline.build_routed), minus file-path lineage (the
-    streaming checkpoint log owns per-file progress instead)."""
-    records = parse_pages(pages, keyword=keyword, with_lineage=False)
-    out = enrich(records, severity_dim(spark), device_dim(spark))
-    if severity_filter is not None:
-        out = out.filter(F.col("Severity") == severity_filter)
-    return out
+    return spark.readStream.schema(PAGES_SCHEMA).parquet(pages_path)
 
 
 def windowed_severity_counts(
@@ -94,19 +69,18 @@ def start_routed_sink(
     routed: DataFrame,
     output_path: str,
     checkpoint_path: str,
-    available_now: bool = True,
 ) -> StreamingQuery:
     """Fan-out parquet sink partitioned by the route keys; exactly-once
-    via the streaming checkpoint + file-sink manifest."""
-    writer = (
+    via the streaming checkpoint + file-sink manifest. Drains what is
+    available now, then stops."""
+    return (
         routed.writeStream.format("parquet")
         .option("path", output_path)
         .option("checkpointLocation", checkpoint_path)
         .partitionBy(*ROUTE_KEYS)
+        .trigger(availableNow=True)
+        .start()
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def make_batch_writer(identifier: str, partition_cols: list[str] | None = None):
@@ -131,7 +105,6 @@ def start_table_sink(
     identifier: str,
     checkpoint_path: str,
     partition_cols: list[str] | None = None,
-    available_now: bool = True,
 ) -> StreamingQuery:
     """``foreachBatch`` → table sink with batch-id idempotency — the
     exactly-once streaming-to-TABLE pattern (file sinks get a manifest
@@ -146,12 +119,12 @@ def start_table_sink(
     appending duplicates — the streaming analogue of the batch
     checkpoint protocol (checkpoint.py docstring, step 4).
     """
-    writer = df.writeStream.foreachBatch(
-        make_batch_writer(identifier, partition_cols)
-    ).option("checkpointLocation", checkpoint_path)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return (
+        df.writeStream.foreachBatch(make_batch_writer(identifier, partition_cols))
+        .option("checkpointLocation", checkpoint_path)
+        .trigger(availableNow=True)
+        .start()
+    )
 
 
 SESSION_SCHEMA = (
@@ -255,13 +228,18 @@ def run_stream_once(
     routed sink; returns row counts per sink stage. Re-running after new
     files arrive processes only the delta (checkpoint log) — the
     streaming counterpart of pipeline.run_pipeline's resume."""
-    pages = read_pages_stream(spark, pages_path)
-    routed = stream_routed(
-        spark, pages, keyword=keyword, severity_filter=severity_filter
+    routed = build_routed(
+        spark,
+        read_pages_stream(spark, pages_path),
+        keyword=keyword,
+        severity_filter=severity_filter,
+        # no file-path lineage: the streaming checkpoint log owns
+        # per-file progress
+        with_lineage=False,
     )
-    q = start_routed_sink(
-        routed, f"{output_dir}/routed", f"{output_dir}/_ckpt_routed"
-    )
-    q.awaitTermination()
-    n_routed = spark.read.parquet(f"{output_dir}/routed").count()
+    routed_path = f"{output_dir}/routed"
+    start_routed_sink(routed, routed_path, f"{output_dir}/_ckpt_routed").awaitTermination()
+    # The schema of the frame just written: a drain that routed no rows
+    # leaves no parquet file to infer one from.
+    n_routed = spark.read.schema(routed.schema).parquet(routed_path).count()
     return {"rows_routed": n_routed}

@@ -4,7 +4,11 @@ package, the contract entry point, the tests, the scripts, the benchmark
 or ``bench.py``. A ``@query(...)`` decorator counts as the reference,
 since registering the query is what runs it; dunders such as
 ``__version__`` are exempt. A name nobody mentions is code nothing runs;
-delete it rather than keep a second, untested copy of a behaviour. Reads
+delete it rather than keep a second, untested copy of a behaviour.
+
+Likewise every defaulted package parameter that an ``if``, ternary or
+``and``/``or`` test of its function reads must be passed by some call
+site there: an option nobody sets keeps a branch nothing runs. Reads
 files only, no Spark."""
 
 from __future__ import annotations
@@ -68,3 +72,72 @@ def unreferenced_names() -> list[str]:
 def test_every_package_definition_is_referenced():
     dead = unreferenced_names()
     assert not dead, "defined but never referenced:\n" + "\n".join(dead)
+
+
+def _branch_tests(fn: ast.AST) -> list[ast.expr]:
+    """The expressions that choose a branch inside ``fn``: ``if`` and
+    ternary tests, and the operands of ``and``/``or``."""
+    out: list[ast.expr] = []
+    for node in ast.walk(fn):
+        if isinstance(node, (ast.If, ast.IfExp)):
+            out.append(node.test)
+        elif isinstance(node, ast.BoolOp):
+            out.extend(node.values)
+    return out
+
+
+def _branching_defaults(fn: ast.FunctionDef) -> list[str]:
+    """Defaulted parameters of ``fn`` that a branch test of ``fn`` reads."""
+    a = fn.args
+    positional = a.posonlyargs + a.args
+    defaulted = [p.arg for p in positional[len(positional) - len(a.defaults) :]]
+    defaulted += [p.arg for p, d in zip(a.kwonlyargs, a.kw_defaults) if d is not None]
+    read = {
+        n.id
+        for t in _branch_tests(fn)
+        for n in ast.walk(t)
+        if isinstance(n, ast.Name)
+    }
+    return [p for p in defaulted if p in read]
+
+
+def _passed(call: ast.Call, fn: ast.FunctionDef, param: str) -> bool:
+    if any(k.arg in (param, None) for k in call.keywords):  # None: **kwargs
+        return True
+    if any(isinstance(x, ast.Starred) for x in call.args):
+        return True
+    positional = [p.arg for p in fn.args.posonlyargs + fn.args.args]
+    return param in positional and len(call.args) > positional.index(param)
+
+
+def unset_options() -> list[str]:
+    """Defaulted package parameters that select a branch of their own
+    function but that no call site anywhere passes. Call sites match by
+    function name, so a name shared by two functions counts the calls of
+    both."""
+    trees = {p: ast.parse(t) for p, t in _sources().items()}
+    calls: dict[str, list[ast.Call]] = {}
+    for tree in trees.values():
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Call):
+                name = getattr(node.func, "id", None) or getattr(node.func, "attr", None)
+                calls.setdefault(name, []).append(node)
+    unset = []
+    for path, tree in trees.items():
+        if not path.is_relative_to(PKG):
+            continue
+        for fn in ast.walk(tree):
+            if not isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                continue
+            for param in _branching_defaults(fn):
+                if not any(_passed(c, fn, param) for c in calls.get(fn.name, [])):
+                    unset.append(f"{path.relative_to(ROOT)}:{fn.lineno} {fn.name}({param})")
+    return sorted(unset)
+
+
+def test_every_branch_selecting_option_has_a_caller():
+    """An option that picks a branch but that no caller sets keeps a
+    second code path that nothing runs: keep the value in use and delete
+    the parameter."""
+    unset = unset_options()
+    assert not unset, "options no call site passes:\n" + "\n".join(unset)

@@ -312,27 +312,6 @@ def test_substring_spans_boilerplate_cap(spark):
     assert uncapped.count() == 10  # C(5,2) pairs, one span each
 
 
-def test_substring_spans_hashed_equals_string_keys(spark):
-    """hash_grams=True (the 16-byte-key 100-TB form) must produce the
-    identical span set as the string-keyed default — on these docs AND
-    on the sf0.001 documents table (real fixture, 27 oracle rows)."""
-    df = spark.createDataFrame(SPAN_DOCS, "doc_id int, text string")
-    as_set = lambda q: {
-        (r.doc_a, r.doc_b, r.a_start, r.b_start, r.span_words)
-        for r in q.collect()
-    }
-    assert as_set(
-        D.exact_substring_spans(df, "doc_id", "text", k=8, min_len=12, hash_grams=True)
-    ) == as_set(D.exact_substring_spans(df, "doc_id", "text", k=8, min_len=12))
-
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    base = as_set(D.exact_substring_spans(docs, "doc_id", "text", k=8, min_len=12))
-    hashed = as_set(
-        D.exact_substring_spans(docs, "doc_id", "text", k=8, min_len=12, hash_grams=True)
-    )
-    assert hashed == base and base, "fixture must produce spans"
-
-
 def _within_brute(docs, k, min_len, cap):
     """Driver-local oracle for within_doc_repeated_spans."""
     from collections import defaultdict

@@ -93,26 +93,14 @@ def _quota_oracle(rows, k):
     return keep
 
 
-@pytest.mark.parametrize("two_phase", [False, True])
-def test_group_quota_matches_oracle(spark, two_phase):
+def test_group_quota_matches_oracle(spark):
     rows = [("a", i) for i in range(20)] + [("b", i) for i in range(100, 103)]
     df = spark.createDataFrame(rows, "grp string, rid long")
-    out = group_quota(df, "grp", "rid", k=5, two_phase=two_phase).collect()
+    out = group_quota(df, "grp", "rid", k=5).collect()
     got = {(r.grp, r.rid, r.rk) for r in out}
     assert got == _quota_oracle(rows, 5)
     # group 'b' is under quota: all 3 rows kept
     assert sum(1 for g, _, _ in got if g == "b") == 3
-
-
-def test_group_quota_two_phase_equals_single_phase(spark):
-    rows = [(f"g{i % 7}", i) for i in range(300)]
-    df = spark.createDataFrame(rows, "grp string, rid long")
-    one = {(r.grp, r.rid, r.rk) for r in group_quota(df, "grp", "rid", 4).collect()}
-    two = {
-        (r.grp, r.rid, r.rk)
-        for r in group_quota(df, "grp", "rid", 4, two_phase=True, n_salts=8).collect()
-    }
-    assert one == two
 
 
 # ---------------------------------------------------------------------------

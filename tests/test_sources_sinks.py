@@ -92,7 +92,7 @@ def test_csv_sink_source_roundtrip(spark, tmp_path):
     )
     path = str(tmp_path / "stage")
     write_stage_csv(df, path)
-    back = read_stage_csv(spark, path, ["A", "B", "C"])
+    back = read_stage_csv(spark, path)
     got = sorted(tuple(r) for r in back.collect())
     assert got == [("", "y", ""), ("a", "", "c")]  # '' preserved, order-free
 

@@ -64,12 +64,12 @@ def test_stage_chain_column_order_and_values(spark):
 def test_stage_cli_roundtrip(spark, tmp_path):
     """python -m juniper_syslog_filter_spark stage ... over CSV dirs."""
     from juniper_syslog_filter_spark.sinks import write_stage_csv
-    from juniper_syslog_filter_spark.sources.csv_source import read_stage_csv_auto
+    from juniper_syslog_filter_spark.sources.csv_source import read_stage_csv
     from juniper_syslog_filter_spark.stages import STAGES
 
     src = str(tmp_path / "in")
     write_stage_csv(_base(spark), src)
-    df = read_stage_csv_auto(spark, src)
+    df = read_stage_csv(spark, src)
     out = STAGES["extract-routing"](df)
     assert out.columns == ["Timestamp", "Hostname", "AppName", "routing", "Message"]
     got = {r.Hostname: r.routing for r in out.collect()}

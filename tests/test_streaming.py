@@ -30,6 +30,30 @@ def test_stream_drain_matches_batch(spark, tmp_path, pages_dir):
     assert res["rows_routed"] == batch_n > 0
 
 
+def test_stream_that_routes_no_rows_counts_zero(spark, tmp_path, pages_dir):
+    """A drain whose keyword matches nothing writes no parquet file; the
+    read-back takes the routed frame's schema instead of inferring one."""
+    out = str(tmp_path / "out")
+    res = run_stream_once(spark, pages_dir, out, keyword="NO_SUCH_KEYWORD_XYZ")
+    assert res == {"rows_routed": 0}
+
+
+def test_stream_session_copies_the_callers_runtime_conf(spark):
+    """The streaming session carries every runtime conf the caller set,
+    not just the time zone; only the shuffle width is its own. The caller
+    is a new session, so no other test sees the conf."""
+    from juniper_syslog_filter_spark.queries.streaming import _stream_session
+
+    caller = spark.newSession()
+    caller.conf.set("spark.sql.caseSensitive", "true")
+    caller.conf.set("spark.sql.session.timeZone", "Asia/Kolkata")
+    ss = _stream_session(caller, n=3)
+    assert ss.conf.get("spark.sql.caseSensitive") == "true"
+    assert ss.conf.get("spark.sql.session.timeZone") == "Asia/Kolkata"
+    assert ss.conf.get("spark.sql.shuffle.partitions") == "3"
+    assert caller.conf.get("spark.sql.shuffle.partitions") != "3"
+
+
 def test_stream_resume_processes_only_delta(spark, tmp_path, pages_dir):
     out = str(tmp_path / "out")
     first = run_stream_once(spark, pages_dir, out)
