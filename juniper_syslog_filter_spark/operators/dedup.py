@@ -25,14 +25,15 @@ bucket width (drop buckets with > ~1k members as spam clusters, see
 skew-join splitting stays on as backstop.
 
 Execution strategy: signature/fingerprint computation runs in ONE
-Arrow-batched ``mapInPandas``/``pandas_udf`` kernel per operator — the
-Spark higher-order-function (``transform``/``filter``/``aggregate``)
-equivalents are interpreted (no codegen) and Catalyst does not CSE the
-shingle subtree across the 16 band-row fields, which measured 979 s for
-5k docs at sf0.1 in round 1 (an O(bands×rows×shingles) interpreted blow-
-up). The vectorized kernels below compute the identical md5-based
-definitions (same hex values as the ``*_sql`` DuckDB twins) in a single
-pass over each Arrow batch; tests check them against those twins.
+Arrow-batched ``mapInPandas``/``pandas_udf`` kernel per operator over
+the Python set kernels (``_py_char_shingles``, ``_py_word_ngrams``) —
+a Spark higher-order-function (``transform``/``filter``/``aggregate``)
+form is interpreted (no codegen) and Catalyst does not CSE the shingle
+subtree across the 16 band-row fields, which measured 979 s for 5k docs
+at sf0.1 in round 1 (an O(bands×rows×shingles) interpreted blow-up).
+The kernels compute the identical md5-based definitions in a single
+pass over each Arrow batch; the ``*_sql`` DuckDB functions are their
+oracles, and tests check the kernels against them.
 """
 
 from __future__ import annotations
@@ -46,22 +47,17 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql.window import Window
 from pyspark.sql import functions as F
 
+from ..session import spread_small_input
+
 # ---------------------------------------------------------------------------
 # Shingling
 # ---------------------------------------------------------------------------
 
 
-def char_shingles(col: Column, k: int = 8) -> Column:
-    """Distinct character k-grams of ``col`` (shorter texts yield their
-    whole text as the single shingle)."""
-    n = F.greatest(F.lit(1), F.length(col) - (k - 1))
-    return F.array_distinct(
-        F.transform(F.sequence(F.lit(1), n), lambda i: F.substring(col, i, k))
-    )
-
-
 def char_shingles_sql(expr: str, k: int = 8) -> str:
-    """DuckDB twin of :func:`char_shingles`."""
+    """Distinct character k-grams of ``expr`` (shorter texts yield their
+    whole text as the single shingle) — the DuckDB oracle of
+    :func:`_py_char_shingles`."""
     return (
         f"list_distinct(list_transform("
         f"range(1, greatest(1, length({expr}) - {k - 1}) + 1), "
@@ -69,22 +65,9 @@ def char_shingles_sql(expr: str, k: int = 8) -> str:
     )
 
 
-def word_ngrams(col: Column, n: int = 2, sep: str = " ") -> Column:
-    """Distinct word n-grams (space-joined) of a token list."""
-    toks = F.split(col, sep)
-    if n == 1:
-        return F.array_distinct(toks)
-    cnt = F.greatest(F.lit(1), F.size(toks) - (n - 1))
-    return F.array_distinct(
-        F.transform(
-            F.sequence(F.lit(1), cnt),
-            lambda i: F.concat_ws(" ", F.slice(toks, i, n)),
-        )
-    )
-
-
 def word_ngrams_sql(expr: str, n: int = 2, sep: str = " ") -> str:
-    """DuckDB twin of :func:`word_ngrams`."""
+    """Distinct word n-grams (space-joined) of ``expr`` split on
+    ``sep`` — the DuckDB oracle of :func:`_py_word_ngrams`."""
     toks = f"string_split({expr}, '{sep}')"
     if n == 1:
         return f"list_distinct({toks})"
@@ -100,15 +83,8 @@ def word_ngrams_sql(expr: str, n: int = 2, sep: str = " ") -> str:
 # ---------------------------------------------------------------------------
 
 
-def jaccard(a: Column, b: Column) -> Column:
-    """Exact Jaccard of two distinct-element arrays."""
-    inter = F.size(F.array_intersect(a, b))
-    union = F.size(F.array_distinct(F.concat(a, b)))
-    return inter.cast("double") / union
-
-
 def jaccard_sql(a: str, b: str) -> str:
-    """DuckDB twin of :func:`jaccard`."""
+    """Exact Jaccard of two distinct-element lists (DuckDB)."""
     return (
         f"len(list_intersect({a}, {b}))::DOUBLE"
         f" / len(list_distinct(list_concat({a}, {b})))"
@@ -132,8 +108,9 @@ def band_bucket_sql(shingles: str, band: int, rows_per_band: int) -> str:
 
 
 def _py_char_shingles(text: str, k: int) -> set[str]:
-    """Python twin of :func:`char_shingles` (set form; order never
-    matters downstream — only min-hash and set sizes are consumed)."""
+    """Distinct character k-grams of ``text`` as a set (order never
+    matters downstream — only min-hash and set sizes are consumed);
+    :func:`char_shingles_sql` is its oracle."""
     t = text or ""
     return {t[i : i + k] for i in range(max(1, len(t) - k + 1))}
 
@@ -167,14 +144,7 @@ def minhash_doc_table(
     md5 = hashlib.md5
     bands_idx = list(range(n_bands))
 
-    src = df.select(id_col, text_col)
-    # A small table read from one parquet file arrives as ONE partition,
-    # which would serialize the kernel onto a single core. At real scale
-    # the scan already has >= defaultParallelism splits and this is a
-    # no-op (no shuffle inserted).
-    sc = df.sparkSession.sparkContext
-    if src.rdd.getNumPartitions() < sc.defaultParallelism:
-        src = src.repartition(sc.defaultParallelism)
+    src = spread_small_input(df.select(id_col, text_col))
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         # shingle → per-seed digest memo: natural-language shingles
@@ -310,32 +280,6 @@ def _hash_sig(items: set[str]) -> np.ndarray:
     return arr
 
 
-def shingle_sig_udf(k: int = 8):
-    """text → sorted int64 char-k-shingle fingerprint array (the stored
-    per-doc signature the verify join distributes). One pass per DOC —
-    never per candidate pair — with memory bounded by the Arrow batch,
-    not the corpus: the earlier design's per-worker text→set memo was a
-    scale bug (a worker verifying pairs from a large corpus would cache
-    ~the whole corpus) and, measured locally, 32 workers × ~150 MB of
-    fresh set allocations hit this host's page-fault storm (625 CPU-s
-    for 11 s of actual set math)."""
-
-    def fn(texts: pd.Series) -> pd.Series:
-        return pd.Series([_hash_sig(_py_char_shingles(t, k)) for t in texts])
-
-    return F.pandas_udf(fn, "array<long>")
-
-
-def word_ngram_sig_udf(n: int = 2):
-    """text → sorted int64 word-n-gram fingerprint array (d4's verify
-    signature; same design notes as :func:`shingle_sig_udf`)."""
-
-    def fn(texts: pd.Series) -> pd.Series:
-        return pd.Series([_hash_sig(_py_word_ngrams(t, n)) for t in texts])
-
-    return F.pandas_udf(fn, "array<long>")
-
-
 def sig_jaccard_udf():
     """Vectorized exact Jaccard of two sorted-distinct int64 signature
     arrays: |a ∩ b| / (|a| + |b| - |a ∩ b|) — the identical rational as
@@ -354,9 +298,9 @@ def sig_jaccard_udf():
 
 
 def _py_word_ngrams(text: str, n: int) -> set[str]:
-    """Python twin of :func:`word_ngrams` (set form). ``split(col, ' ')``
-    keeps empty tokens (Java ``split(re, -1)``), exactly like
-    ``str.split(' ')``."""
+    """Distinct word n-grams of ``text`` as a set;
+    :func:`word_ngrams_sql` is its oracle. ``str.split(' ')`` keeps
+    empty tokens, exactly like DuckDB's ``string_split``."""
     toks = (text or "").split(" ")
     if n == 1:
         return set(toks)
@@ -396,16 +340,20 @@ def verify_pairs_jaccard(
     cand: DataFrame,
     id_col: str,
     text_col: str,
-    sig_udf,
     threshold: float,
 ) -> DataFrame:
-    """:func:`verify_pairs_sig` over signatures fingerprinted on the fly
-    (``sig_udf``: text → sorted int64 array), one pass per DOC — never
-    per candidate pair."""
-    sig = df.select(F.col(id_col).alias("id"), sig_udf(F.col(text_col)).alias("sig"))
-    sc = df.sparkSession.sparkContext
-    if sig.rdd.getNumPartitions() < sc.defaultParallelism:
-        sig = sig.repartition(sc.defaultParallelism)
+    """:func:`verify_pairs_sig` on exact word-2-gram Jaccard: each doc's
+    2-gram set is fingerprinted (:func:`_hash_sig`) by a pandas UDF in
+    one pass per DOC — never per candidate pair — with memory bounded by
+    the Arrow batch, not the corpus."""
+
+    def fn(texts: pd.Series) -> pd.Series:
+        return pd.Series([_hash_sig(_py_word_ngrams(t, 2)) for t in texts])
+
+    sig_udf = F.pandas_udf(fn, "array<long>")
+    sig = spread_small_input(
+        df.select(F.col(id_col).alias("id"), sig_udf(F.col(text_col)).alias("sig"))
+    )
     # Referenced by both join sides; materialize once (same decision as
     # the bucket table in lsh_candidate_pairs — a lazy cache races).
     sig = sig.localCheckpoint(eager=True)
@@ -1007,13 +955,7 @@ def within_doc_repeated_spans(
                 }
             )
 
-    src = df.select(F.col(id_col), F.col(text_col))
-    # Same single-partition guard as minhash_doc_table: a small demo
-    # table read from one file must not serialize the kernel onto one
-    # core; at real scale the scan already has enough splits (no-op).
-    sc = df.sparkSession.sparkContext
-    if src.rdd.getNumPartitions() < sc.defaultParallelism:
-        src = src.repartition(sc.defaultParallelism)
+    src = spread_small_input(df.select(F.col(id_col), F.col(text_col)))
     return src.mapInPandas(
         kernel,
         schema=(
@@ -1077,10 +1019,7 @@ def remove_within_doc_repeats(
                 }
             )
 
-    src = df.select(F.col(id_col), F.col(text_col))
-    sc = df.sparkSession.sparkContext
-    if src.rdd.getNumPartitions() < sc.defaultParallelism:
-        src = src.repartition(sc.defaultParallelism)
+    src = spread_small_input(df.select(F.col(id_col), F.col(text_col)))
     return src.mapInPandas(
         kernel,
         schema=f"doc_id {id_type}, text_deduped string, n_removed long",

@@ -8,49 +8,39 @@ threshold) survive. The reference repo has no graph surface (its
 dedup-free syslog pipeline never needs one); this operator belongs to
 the added training-data family, like the dedup/ANN modules.
 
-Algorithm: iterative min-label propagation expressed as DataFrame
-joins — every node starts labelled with itself; each round every node
-takes the min of its own label and its neighbours' labels; fixpoint =
-every node labelled with the smallest id reachable from it, i.e. the
-component minimum (the deterministic cluster id).
+Algorithm: alternating large-star/small-star (Kiveris et al.,
+"Connected Components in MapReduce and Beyond", SoCC'14) expressed as
+DataFrame joins. The edge set is rewired each round until it is a
+forest of disjoint stars, each rooted at its component minimum (the
+deterministic cluster id). It converges in O(log² n) rounds on any
+graph shape, including long chains whose diameter is ~n.
 
 Scale design (the 100-TB lens):
 
-* Convergence is bounded by the component DIAMETER, not size. Near-dup
-  clusters in web corpora are dense and tiny (mirrors/boilerplate
-  families), so diameter is single-digit; ``max_iter`` defaults well
-  above that and the loop exits as soon as an iteration changes no
-  label.
-* Each round is ONE shuffle join (edges ⋈ labels on dst) + ONE
-  partial-aggregated ``groupBy(node)``. The self-loop message carries
-  each node's CURRENT label into that same aggregation, so the
-  convergence test (``min(label) != own label``) is a filter over the
-  already-materialized round output — no second join, no second
-  shuffle, one extra metadata-only job per round.
+* Each phase is one partial-aggregated grouped ``min`` plus one join
+  back; neither phase ever grows the edge count.
 * Shuffle width is sized to the GRAPH, not the session default: a
   verified dup-pair graph is orders of magnitude smaller than the
   corpus that produced it (477 nodes from 240 k docs at sf0.1), and a
   round over a few thousand edges must not pay 32 shuffle tasks of
-  scheduling overhead. One ``count`` on the checkpointed edge list
+  scheduling overhead. One ``count`` on the checkpointed pair list
   picks ``ceil(|E| / 200k)`` partitions, clamped to 4× cluster
   parallelism — at 100 TB the same rule widens the rounds to match the
-  (still corpus-dwarfed) pair volume.
+  (still corpus-dwarfed) pair volume. Under AQE (which
+  ``session.build_session`` turns on) a ``localCheckpoint`` reports
+  unknown partitioning, so the consumers of each checkpoint re-exchange
+  it at the session width, AQE-coalesced: the sized repartition does
+  not carry over to them.
 * ``localCheckpoint`` truncates lineage each round; without it the
   plan doubles per iteration and the driver OOMs planning round ~15.
-  (Same rationale as dedup.py's signature materialization.)
-* For adversarial long-chain graphs (diameter ~ n) the published fix is
-  alternating large-star/small-star (Kiveris et al., "Connected
-  Components in MapReduce and Beyond", SoCC'14), which converges in
-  O(log² n) rounds with the identical per-round join shape —
-  ``algorithm="star"`` selects it (:func:`_cc_star` below);
-  min-label propagation stays the default because dup graphs are
-  diameter-bounded and propagation's per-round constant is smaller
-  (one join vs two grouped phases).
-* The edge list is symmetrized + self-looped once up front; dedup
-  (``distinct``) keeps message volume at 2|E|+|V| per round.
+  (Same rationale as dedup.py's signature materialization.) Each
+  round's intermediate checkpoints are evicted once consumed, so
+  executor block usage does not grow with the round count.
+* ``max_iter`` rounds without a fixpoint raise instead of returning
+  labels that are not yet component minima.
 
-Oracle twin: a recursive CTE computing min-reachable-id over the same
-symmetrized edges (see ``queries/dedup.q_d6_dup_clusters``).
+Oracle twin: a recursive CTE computing min-reachable-id over the
+symmetrized pair edges (see ``queries/dedup.q_d6_dup_clusters``).
 """
 
 from __future__ import annotations
@@ -63,10 +53,11 @@ def _persistent_rdd_ids(spark) -> set:
     """Ids of every RDD currently persisted on this SparkContext.
 
     ``DataFrame.localCheckpoint`` persists an internal RDD but hands
-    back no handle to it, so per-round eviction in the star-CC loop is
-    done by diffing these snapshots (``JavaSparkContext
-    .getPersistentRDDs`` is the public Scala API surfaced through the
-    py4j gateway — there is no PySpark-level equivalent)."""
+    back no handle to it, so per-round eviction in the connected-
+    components loop is done by diffing these snapshots
+    (``JavaSparkContext.getPersistentRDDs`` is the public Scala API
+    surfaced through the py4j gateway — there is no PySpark-level
+    equivalent)."""
     jmap = spark.sparkContext._jsc.getPersistentRDDs()
     return {int(k) for k in jmap.keySet().toArray()}
 
@@ -88,117 +79,18 @@ def connected_components(
     src_col: str,
     dst_col: str,
     max_iter: int = 25,
-    algorithm: str = "propagation",
-    rounds_out: list[int] | None = None,
 ) -> DataFrame:
     """Close an undirected pair list into components.
 
     Returns ``(node, cluster_id)`` — one row per distinct node appearing
     in ``pairs``, ``cluster_id`` = min node id in its component (a
-    deterministic canonical-keeper election).
+    deterministic canonical-keeper election). Raises ``RuntimeError``
+    when ``max_iter`` rounds end without a fixpoint.
 
-    ``algorithm``: ``"propagation"`` (default — min-label propagation,
-    O(diameter) rounds, one join per round) or ``"star"`` (alternating
-    large-star/small-star, Kiveris et al. SoCC'14 — O(log² n) rounds on
-    ANY graph shape, including adversarial long chains). Both return
-    the identical labelling. ``rounds_out``, if given a list, receives
-    the executed round count (for convergence diagnostics/tests).
-    """
-    if algorithm == "star":
-        return _cc_star(pairs, src_col, dst_col, max_iter, rounds_out)
-    if algorithm != "propagation":
-        raise ValueError(f"unknown algorithm {algorithm!r}")
-    spark = pairs.sparkSession
-    # Materialize the pair list ONCE before fanning it into the 4-way
-    # symmetrize union — each union branch re-evaluates its input, and
-    # the input here is typically a full near-dup detection (LSH join +
-    # verify), which must not run 4 times.
-    e = pairs.select(
-        F.col(src_col).alias("u"), F.col(dst_col).alias("v")
-    ).localCheckpoint()
-    # Symmetrize; self-loops make every node its own message source so
-    # singletons-in-pairs and labels survive rounds without an outer
-    # join — and give each round's aggregation the node's own current
-    # label, which doubles as the convergence signal below.
-    edges = (
-        e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
-        .union(e.select(F.col("u").alias("u"), F.col("u").alias("v")))
-        .union(e.select(F.col("v").alias("u"), F.col("v").alias("v")))
-        .distinct()
-        .localCheckpoint()
-    )
-
-    # Size per-round shuffles to the pair graph (see module docstring):
-    # the count is over already-checkpointed blocks, so it costs one
-    # metadata scan, not a recompute of the upstream pair detection.
-    n_edges = edges.count()
-    parts = max(
-        1,
-        min(4 * spark.sparkContext.defaultParallelism, n_edges // 200_000 + 1),
-    )
-    # Graph-sized shuffle widths via EXPLICIT per-plan repartition, not a
-    # session-conf mutation (racy if two queries share the session): the
-    # joins see both sides hash-partitioned (parts) on the join key and
-    # elide their exchanges; the per-round aggregation sits on a
-    # repartition(parts, node) whose partitioning it reuses, so every
-    # shuffle in the loop runs at `parts` width regardless of
-    # spark.sql.shuffle.partitions.
-    edges = edges.repartition(parts, "v").localCheckpoint()
-    labels = (
-        edges.select(F.col("u").alias("node"))
-        .repartition(parts, "node")
-        .distinct()
-        .withColumn("label", F.col("node"))
-        .localCheckpoint()
-    )
-
-    rounds = 0
-    for _ in range(max_iter):
-        rounds += 1
-        # node <- min(label of every neighbour incl. itself); the
-        # self-loop row is tagged so the same aggregation also emits
-        # the node's previous label for the fixpoint test.
-        msgs = edges.join(
-            labels.repartition(parts, "node"),
-            edges["v"] == labels["node"],
-        ).select(
-            edges["u"].alias("node"),
-            F.col("label"),
-            (edges["u"] == edges["v"]).alias("is_self"),
-        )
-        agg = (
-            msgs.repartition(parts, "node")
-            .groupBy("node")
-            .agg(
-                F.min("label").alias("label"),
-                F.min(F.when(F.col("is_self"), F.col("label"))).alias(
-                    "_old"
-                ),
-            )
-            .localCheckpoint()
-        )
-        changed = agg.where(F.col("label") != F.col("_old")).count()
-        labels = agg.select("node", "label")
-        if changed == 0:
-            break
-    if rounds_out is not None:
-        rounds_out.append(rounds)
-
-    return labels.select(F.col("node"), F.col("label").alias("cluster_id"))
-
-
-def _cc_star(
-    pairs: DataFrame,
-    src_col: str,
-    dst_col: str,
-    max_iter: int,
-    rounds_out: list[int] | None,
-) -> DataFrame:
-    """Alternating large-star/small-star connected components (Kiveris,
-    Lattanzi, Mirrokni, Rastogi, Vassilvitskii — "Connected Components
-    in MapReduce and Beyond", SoCC'14, Algorithm 2 "Two-Phase").
-
-    Per round, over the canonical edge set (big endpoint first):
+    Alternating large-star/small-star (Kiveris, Lattanzi, Mirrokni,
+    Rastogi, Vassilvitskii — "Connected Components in MapReduce and
+    Beyond", SoCC'14, Algorithm 2 "Two-Phase"). Per round, over the
+    canonical edge set (big endpoint first):
 
     * **large-star(u)**: every strictly-larger neighbour of ``u`` is
       re-wired to ``m = min(Γ(u) ∪ {u})`` — each undirected edge is
@@ -208,16 +100,13 @@ def _cc_star(
 
     Both phases preserve connectivity and never increase the edge
     count; the paper proves convergence to disjoint stars rooted at
-    each component minimum in O(log² n) rounds on any graph — this is
-    the scale path for adversarial long-chain graphs where min-label
-    propagation needs O(diameter) rounds.
+    each component minimum in O(log² n) rounds on any graph.
 
     Scale design: each phase is one grouped ``min`` (partial-agg,
-    map-side combined) + one co-partitioned join back, at a shuffle
-    width sized to the pair graph exactly as the propagation variant;
-    ``localCheckpoint`` per round truncates lineage. The fixpoint test
-    (edge set unchanged) is |new| == |old| plus an empty anti-join —
-    two graph-sized metadata jobs per round.
+    map-side combined) + one join back; ``localCheckpoint`` per round
+    truncates lineage. The fixpoint test (edge set unchanged) is
+    |new| == |old| plus an empty anti-join — two graph-sized metadata
+    jobs per round.
     """
     spark = pairs.sparkSession
     # Checkpoint-block hygiene: PySpark's DataFrame.localCheckpoint
@@ -266,21 +155,13 @@ def _cc_star(
     _unpersist_ids(spark, ids_b - ids_a)
     prev_edge_ids = ids_d - ids_c
 
-    rounds = 0
     for _ in range(max_iter):
-        rounds += 1
         # -- large-star: full neighbourhoods need both directions.
-        # Exchange the symmetrized set ONCE and checkpoint it: both
-        # consumers (the min aggregate and the join probe) reuse the
-        # materialized HashPartitioning(u) — LogicalRDD preserves the
-        # checkpointed partitioning, so neither inserts a new Exchange.
-        # Before this, sym was recomputed AND re-exchanged per branch
-        # (two shuffles of the doubled edge set per round). Measured at
-        # sf0.1 in-suite: 5.27 s (old, cross-window min) → 4.68 s — the
-        # saved exchange beats the added materialization job even at
-        # demo scale; at real scale the win grows with edge bytes (one
-        # network exchange + a node-local checkpoint write vs two
-        # network exchanges of the same data).
+        # The symmetrized set is materialized ONCE for its two consumers
+        # (the min aggregate and the join probe) instead of being
+        # recomputed per consumer (measured at sf0.1 on the 32-vCPU
+        # host: 5.27 s → 4.68 s). Under AQE the checkpoint reports
+        # unknown partitioning, so each consumer re-exchanges it on u.
         ids_r0 = _persistent_rdd_ids(spark)
         sym = (
             edges.union(
@@ -304,8 +185,7 @@ def _cc_star(
             .localCheckpoint()
         )
         ids_r2 = _persistent_rdd_ids(spark)
-        # -- small-star: ls is already canonical (u > v everywhere) and
-        # already checkpointed partitioned-by-u — no re-exchange.
+        # -- small-star: ls is already canonical (u > v everywhere).
         minss = ls.groupBy("u").agg(F.min("v").alias("m"))
         ss = (
             ls.join(minss, "u")
@@ -336,8 +216,11 @@ def _cc_star(
         edges, prev_count = new_edges, new_count
         if unchanged:
             break
-    if rounds_out is not None:
-        rounds_out.append(rounds)
+    else:
+        _unpersist_ids(spark, prev_edge_ids | (ids_c - ids_b))
+        raise RuntimeError(
+            f"connected_components: no fixpoint after {max_iter} rounds"
+        )
 
     # At the fixpoint the edge set is a disjoint star forest rooted at
     # each component minimum: (u, v) = (member, root). Roots and

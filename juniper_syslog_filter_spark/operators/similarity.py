@@ -160,11 +160,13 @@ def brute_force_topk(
     q_col: str = "q_emb",
 ) -> DataFrame:
     """Exact cosine top-k of ``embeddings`` against the single-row
-    broadcast ``query`` (column ``q_col``)."""
+    broadcast ``query`` (column ``q_col``). Returns every column of
+    ``embeddings`` but ``emb_col``, plus ``cos_sim``."""
     sim = cosine(F.col(emb_col).cast("array<double>"), F.col(q_col).cast("array<double>"))
+    keep = [c for c in embeddings.columns if c != emb_col]
     return (
         embeddings.crossJoin(F.broadcast(query))
-        .select(id_col, F.round(sim, 6).alias("cos_sim"))
+        .select(*keep, F.round(sim, 6).alias("cos_sim"))
         .orderBy(F.desc("cos_sim"), F.asc(id_col))
         .limit(k)
     )

@@ -14,7 +14,7 @@ from ..functions import text as T
 from ..operators import dedup as D
 from ..operators.contamination import contaminated_docs
 from ..operators.dedup import paragraph_dedup
-from ..operators.graph import connected_components, dup_clusters
+from ..operators.graph import dup_clusters
 from ..operators.sampling import split_expr
 
 
@@ -54,36 +54,6 @@ def _split_case_sql(col: str) -> str:
     )
 
 
-# Connected components as min-reachable-id over the symmetrized +
-# self-looped d2 pair graph (recursive CTE; UNION dedup terminates).
-# d12 produces the identical labelling as d6 (same pair graph, same
-# component-minimum contract) via a different distributed algorithm —
-# one recursive-CTE oracle checks both.
-_DUP_CLUSTERS_SQL = f"""
-        {_LSH_CAND_CTE.replace("WITH sh", "WITH RECURSIVE sh", 1)}
-        , pairs AS (
-          SELECT c.id_a, c.id_b
-          FROM cand c
-          JOIN sh sa ON sa.doc_id = c.id_a
-          JOIN sh sb ON sb.doc_id = c.id_b
-          WHERE round({D.jaccard_sql('sa.sh', 'sb.sh')}, 6) >= 0.5
-        ),
-        edges AS (
-          SELECT id_a AS u, id_b AS v FROM pairs
-          UNION SELECT id_b, id_a FROM pairs
-          UNION SELECT id_a, id_a FROM pairs
-          UNION SELECT id_b, id_b FROM pairs
-        ),
-        reach(u, v) AS (
-          SELECT u, v FROM edges
-          UNION
-          SELECT r.u, e.v FROM reach r JOIN edges e ON r.v = e.u
-        )
-        SELECT u AS doc_id, MIN(v) AS cluster_id, MIN(v) = u AS is_keeper
-        FROM reach GROUP BY u
-    """
-
-
 @query(oracle="""
         SELECT min(doc_id) AS keeper_doc_id, count(*) AS n_copies
         FROM documents GROUP BY text
@@ -91,10 +61,9 @@ _DUP_CLUSTERS_SQL = f"""
 def q_d1_dedup_exact(spark, sf_dir):
     """Exact dedup via hash-groupBy: one keeper doc per distinct text."""
     d = load_table(spark, sf_dir, "documents")
-    return d.groupBy("text").agg(
-        F.min("doc_id").alias("keeper_doc_id"),
-        F.count(F.lit(1)).alias("n_copies"),
-    ).select("keeper_doc_id", "n_copies")
+    return D.exact_dedup(d, ["text"], "doc_id").select(
+        "keeper_doc_id", "n_copies"
+    )
 
 
 @query(oracle=f"""
@@ -145,17 +114,40 @@ def q_d4_ngram_jaccard(spark, sf_dir):
         D.minhash_buckets(d, "doc_id", "text", n_bands=8, rows_per_band=2, k=8),
         max_bucket=1000,
     )
-    return D.verify_pairs_jaccard(
-        d, cand, "doc_id", "text", D.word_ngram_sig_udf(2), threshold=0.2
-    )
+    return D.verify_pairs_jaccard(d, cand, "doc_id", "text", threshold=0.2)
 
 
-@query(oracle=_DUP_CLUSTERS_SQL)
+# Oracle: connected components as min-reachable-id over the
+# symmetrized + self-looped d2 pair graph (recursive CTE; UNION dedup
+# terminates).
+@query(oracle=f"""
+        {_LSH_CAND_CTE.replace("WITH sh", "WITH RECURSIVE sh", 1)}
+        , pairs AS (
+          SELECT c.id_a, c.id_b
+          FROM cand c
+          JOIN sh sa ON sa.doc_id = c.id_a
+          JOIN sh sb ON sb.doc_id = c.id_b
+          WHERE round({D.jaccard_sql('sa.sh', 'sb.sh')}, 6) >= 0.5
+        ),
+        edges AS (
+          SELECT id_a AS u, id_b AS v FROM pairs
+          UNION SELECT id_b, id_a FROM pairs
+          UNION SELECT id_a, id_a FROM pairs
+          UNION SELECT id_b, id_b FROM pairs
+        ),
+        reach(u, v) AS (
+          SELECT u, v FROM edges
+          UNION
+          SELECT r.u, e.v FROM reach r JOIN edges e ON r.v = e.u
+        )
+        SELECT u AS doc_id, MIN(v) AS cluster_id, MIN(v) = u AS is_keeper
+        FROM reach GROUP BY u
+    """)
 def q_d6_dup_clusters(spark, sf_dir):
     """Duplicate-cluster closure: connected components over the d2
-    MinHash-LSH verified pair graph (min-label propagation, diameter-
-    bounded rounds — operators/graph.py), cluster id = component min,
-    is_keeper marks the canonical survivor."""
+    MinHash-LSH verified pair graph (large-star/small-star, O(log² n)
+    rounds on any graph shape — operators/graph.py), cluster id =
+    component min, is_keeper marks the canonical survivor."""
     d = load_table(spark, sf_dir, "documents")
     pairs = D.minhash_lsh_pairs(
         d, "doc_id", "text", threshold=0.5, n_bands=8, rows_per_band=2, k=8
@@ -299,32 +291,6 @@ def q_ct2_split_leakage(spark, sf_dir):
         .groupBy("split_lo", "split_hi")
         .agg(F.count(F.lit(1)).alias("n_pairs"))
         .withColumn("is_leak", F.col("split_lo") != F.col("split_hi"))
-    )
-
-
-@query(oracle=_DUP_CLUSTERS_SQL)
-def q_d12_cc_star(spark, sf_dir):
-    """Duplicate-cluster closure via alternating large-star/small-star
-    (Kiveris et al. SoCC'14; operators/graph.connected_components with
-    algorithm="star") over the same MinHash-LSH verified pair graph as
-    d6 — the O(log² n)-round variant that stays fast on adversarial
-    long-chain graphs where d6's min-label propagation needs
-    O(diameter) rounds (tests/test_graph.py pins the round-count
-    separation on a 200-node path). Output contract and oracle are
-    identical to d6: the labelling is the same component-minimum
-    election, so the recursive-CTE oracle checks BOTH algorithms
-    value-exactly."""
-    d = load_table(spark, sf_dir, "documents")
-    pairs = D.minhash_lsh_pairs(
-        d, "doc_id", "text", threshold=0.5, n_bands=8, rows_per_band=2, k=8
-    )
-    cc = connected_components(
-        pairs.select("id_a", "id_b"), "id_a", "id_b", algorithm="star"
-    )
-    return cc.select(
-        F.col("node").alias("doc_id"),
-        "cluster_id",
-        (F.col("node") == F.col("cluster_id")).alias("is_keeper"),
     )
 
 

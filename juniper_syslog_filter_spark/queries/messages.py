@@ -19,6 +19,7 @@ from ..functions import pii as PII
 from ..functions.ip import classify_ip_expr
 from ..operators.filters import filter_and_merge_severity
 from ..operators.project import reduce_columns
+from ..session import spread_small_input
 
 
 _MSG_SQL = """
@@ -77,16 +78,11 @@ def _msg_col() -> F.Column:
 
 
 def _events_with_msg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = load_table(spark, sf_dir, "events")
     # The message-synth + extract chain is CPU-bound; the sf-dir events
     # table is ONE small single-row-group parquet file, i.e. one input
-    # split, which would serialize the whole chain onto one core. Fan
-    # out first — same small-input guard as zip_source/dedup. At real
-    # scale the scan has >= defaultParallelism splits and this is a
-    # no-op branch; the chain itself stays map-only.
-    par = spark.sparkContext.defaultParallelism
-    if ev.rdd.getNumPartitions() < par:
-        ev = ev.repartition(par)
+    # split, which would serialize the whole chain onto one core. The
+    # chain itself stays map-only.
+    ev = spread_small_input(load_table(spark, sf_dir, "events"))
     return ev.withColumn("Message", _msg_col())
 
 

@@ -28,22 +28,11 @@ from ..operators import similarity as S
     """)
 def q_s1_cosine_topk(spark, sf_dir):
     """Brute-force cosine top-k ANN baseline over embeddings vs the
-    vec_id=0 query vector; double-precision left-fold dot products match
-    DuckDB bit-for-bit."""
+    vec_id=0 query vector (similarity.brute_force_topk);
+    double-precision left-fold dot products match DuckDB bit-for-bit."""
     e = load_table(spark, sf_dir, "embeddings")
     q = e.filter(F.col("vec_id") == 0).select(F.col("embedding").alias("q_emb"))
-    emb = F.col("embedding").cast("array<double>")
-    qe = F.col("q_emb").cast("array<double>")
-    dot = F.aggregate(F.zip_with(emb, qe, lambda a, b: a * b), F.lit(0.0), lambda acc, x: acc + x)
-    norm = lambda c: F.sqrt(F.aggregate(c, F.lit(0.0), lambda acc, x: acc + x * x))  # noqa: E731
-    sim = dot / (norm(emb) * norm(qe))
-    return (
-        e.crossJoin(F.broadcast(q))
-        .filter(F.col("vec_id") != 0)
-        .select("vec_id", "label", F.round(sim, 6).alias("cos_sim"))
-        .orderBy(F.desc("cos_sim"), F.asc("vec_id"))
-        .limit(20)
-    )
+    return S.brute_force_topk(e.filter(F.col("vec_id") != 0), q, k=20)
 
 
 @query(oracle=f"""
@@ -257,14 +246,15 @@ def q_s5_semantic_dedup(spark, sf_dir):
         FROM asg WHERE rn = 1 GROUP BY cent_id
     """)
 def q_km1_kmeans_step(spark, sf_dir):
-    """One distributed Lloyd (k-means) step over the embeddings
-    (similarity.lloyd_step): 8 deterministic seed centroids (lowest
-    vec_ids, the s4 convention), broadcast argmax-cosine assignment,
-    then a per-cell census. The float centroid means are
-    summation-order-dependent, so the ORACLE-checked surface is the
-    exact part — membership counts, min member, integer label sum —
-    while the mean-update arithmetic is pinned by pytest
-    (tests/test_similarity.py) on integer-exact blobs."""
+    """The assignment half of a Lloyd (k-means) step over the
+    embeddings: 8 deterministic seed centroids (lowest vec_ids, the s4
+    convention), broadcast argmax-cosine assignment
+    (similarity.ivf_assign_cells), then a per-cell census. The float
+    centroid means are summation-order-dependent, so this query checks
+    only the exact part against the oracle — membership counts, min
+    member, integer label sum. The mean update (similarity.lloyd_step)
+    is not run here; pytest pins it (tests/test_similarity.py) on
+    integer-exact blobs."""
     e = load_table(spark, sf_dir, "embeddings")
     cents = (
         e.filter(F.col("vec_id") != 0)

@@ -5,13 +5,15 @@ The reference is a single process with zero intra-job parallelism
 linearly with executors: AQE (runtime coalesce + skew-join split), Arrow
 for the pandas-UDF kernels, and a shuffle-partition count sized to the
 local core count (on a real cluster: 2-3x total executor cores).
+:func:`spread_small_input` is the one small-input fan-out guard the
+Python kernels share.
 """
 
 from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 
 def _default_driver_memory() -> str:
@@ -115,3 +117,16 @@ def build_session(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def spread_small_input(df: DataFrame) -> DataFrame:
+    """``df`` repartitioned to the cluster's default parallelism when it
+    has fewer partitions. A small table read from one parquet file
+    arrives as ONE partition, which would serialize a CPU-bound kernel
+    onto a single core. At real scale the scan already has >=
+    defaultParallelism splits and ``df`` comes back unchanged (no
+    shuffle inserted)."""
+    par = df.sparkSession.sparkContext.defaultParallelism
+    if df.rdd.getNumPartitions() < par:
+        return df.repartition(par)
+    return df

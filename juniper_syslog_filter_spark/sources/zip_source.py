@@ -19,6 +19,7 @@ one member (ZIP members are independently deflate-compressed, so a
 member read costs O(member), not O(archive)). Paths must be
 task-readable for that mode (file:/ here; a DFS fuse mount or
 NFS at scale) — otherwise the per-archive path is used regardless.
+The choice follows from the archive count and the path schemes alone.
 
 Error isolation mirrors extract_all_zips (modules/extract.py:147-161):
 a corrupt archive or non-CSV member yields an error row (zip path +
@@ -94,33 +95,27 @@ def extract_zip_csvs(
     spark: SparkSession,
     zip_glob: str,
     columns: list[str] | None = None,
-    per_member: bool | None = None,
 ) -> DataFrame:
     """Distributed S1/S2: every ``*.csv`` member of every matched ZIP →
     rows. Output = member columns + lineage (``src_zip``, ``src_member``)
     + ``_error`` ('' when clean).
 
-    ``per_member=None`` (default) auto-selects: the per-member fan-out
-    runs when the matched archive count is below
+    The per-member fan-out runs when the matched archive count is below
     ``sc.defaultParallelism`` AND every path is file:-scheme; otherwise
     the per-archive blob path runs (one task per zip, no second read).
-    Pass True/False to force. The auto decision costs one metadata-only
-    job (binaryFile prunes ``content`` when only ``path`` is selected).
+    The choice costs one metadata-only job (binaryFile prunes
+    ``content`` when only ``path`` is selected).
     """
     cols = columns or SYSLOG_COLUMNS
     schema = _out_schema(cols)
 
     src = spark.read.format("binaryFile").option("pathGlobFilter", "*.zip").load(zip_glob)
 
-    if per_member is not False:
-        # Metadata-only scan: content is pruned when unselected.
-        paths = [r.path for r in src.select("path").collect()]
-        locals_ = [_local_path(p) for p in paths]
-        auto_ok = len(paths) < spark.sparkContext.defaultParallelism and all(locals_)
-        if per_member or (per_member is None and auto_ok and paths):
-            if not all(locals_):
-                raise ValueError("per_member=True requires file:-scheme paths")
-            return _extract_per_member(spark, cols, schema, list(zip(paths, locals_)))
+    # Metadata-only scan: content is pruned when unselected.
+    paths = [r.path for r in src.select("path").collect()]
+    locals_ = [_local_path(p) for p in paths]
+    if paths and all(locals_) and len(paths) < spark.sparkContext.defaultParallelism:
+        return _extract_per_member(spark, cols, schema, list(zip(paths, locals_)))
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:

@@ -4,6 +4,7 @@ driver-local oracle where the semantics allow."""
 
 from __future__ import annotations
 
+import duckdb
 import pytest
 from pyspark.sql import functions as F
 
@@ -36,28 +37,42 @@ def test_lsh_finds_exact_and_near_dups(spark, docs):
     assert (1, 4) not in got and (2, 4) not in got  # unrelated doc never pairs
 
 
-def test_jaccard_matches_python_sets(spark, docs):
-    out = (
-        docs.alias("a")
-        .crossJoin(docs.alias("b"))
-        .filter(F.col("a.doc_id") < F.col("b.doc_id"))
-        .select(
-            F.col("a.doc_id").alias("ia"),
-            F.col("b.doc_id").alias("ib"),
-            D.jaccard(
-                D.char_shingles(F.col("a.text"), 8), D.char_shingles(F.col("b.text"), 8)
-            ).alias("j"),
-        )
-        .collect()
-    )
-    texts = dict(DOCS)
+def _duck_texts(texts: list[str]):
+    """DuckDB connection holding ``d(i, t)``, one row per text."""
+    con = duckdb.connect()
+    con.execute("CREATE TABLE d (i INT, t VARCHAR)")
+    con.executemany("INSERT INTO d VALUES (?, ?)", list(enumerate(texts)))
+    return con
 
-    def sh(t):
-        return {t[i : i + 8] for i in range(max(1, len(t) - 7))}
 
-    for r in out:
-        a, b = sh(texts[r.ia]), sh(texts[r.ib])
-        assert abs(r.j - len(a & b) / len(a | b)) < 1e-9
+def _duck_sets(texts: list[str], sql_of) -> list[set[str]]:
+    """``sql_of('t')`` evaluated by DuckDB on each text, as Python sets."""
+    rows = _duck_texts(texts).execute(
+        f"SELECT i, {sql_of('t')} FROM d ORDER BY i"
+    ).fetchall()
+    return [set(r[1]) for r in rows]
+
+
+EDGE_TEXTS = ["", "short", "a b c d", "a  b", " lead and trail ", "x"]
+
+
+def test_jaccard_matches_python_sets():
+    """The char-shingle kernel equals its DuckDB oracle on every text,
+    and ``jaccard_sql`` over those shingles equals Python set Jaccard."""
+    texts = [t for _, t in DOCS] + EDGE_TEXTS
+    for k in (1, 3, 8):
+        duck = _duck_sets(texts, lambda e: D.char_shingles_sql(e, k))
+        assert duck == [D._py_char_shingles(t, k) for t in texts], k
+    texts = [t for _, t in DOCS]
+    rows = _duck_texts(texts).execute(f"""
+        WITH s AS (SELECT i, {D.char_shingles_sql('t', 8)} AS sh FROM d)
+        SELECT a.i, b.i, {D.jaccard_sql('a.sh', 'b.sh')}
+        FROM s a JOIN s b ON a.i < b.i
+    """).fetchall()
+    assert len(rows) == 6
+    for ia, ib, j in rows:
+        sa, sb = D._py_char_shingles(texts[ia], 8), D._py_char_shingles(texts[ib], 8)
+        assert abs(j - len(sa & sb) / len(sa | sb)) < 1e-12, (ia, ib)
 
 
 def test_simhash_identical_for_dups_and_differs_for_unrelated(spark, docs):
@@ -83,10 +98,14 @@ def test_max_bucket_caps_pathological_buckets(spark):
     assert capped.count() == 0
 
 
-def test_word_ngrams(spark):
-    df = spark.createDataFrame([("a b c d",)], "t string")
-    got = df.select(D.word_ngrams(F.col("t"), 2).alias("g")).collect()[0].g
-    assert sorted(got) == ["a b", "b c", "c d"]
+def test_word_ngrams():
+    """The word-n-gram kernel equals its DuckDB oracle, empty tokens from
+    repeated or edge spaces included."""
+    assert D._py_word_ngrams("a b c d", 2) == {"a b", "b c", "c d"}
+    texts = [t for _, t in DOCS] + EDGE_TEXTS
+    for n in (1, 2, 3):
+        duck = _duck_sets(texts, lambda e: D.word_ngrams_sql(e, n))
+        assert duck == [D._py_word_ngrams(t, n) for t in texts], n
 
 
 def test_exact_dedup_operator(spark, docs):
@@ -94,44 +113,55 @@ def test_exact_dedup_operator(spark, docs):
     assert out == {1: 2, 3: 1, 4: 1}
 
 
-def test_sig_jaccard_equals_string_set_jaccard(spark, docs):
-    """The int64-fingerprint verify path must reproduce exact string-set
-    Jaccard (collision probability ~1e-14 — any mismatch here is a bug,
-    not a collision)."""
+def _all_pairs(docs):
     a = docs.select(F.col("doc_id").alias("id_a"))
     b = docs.select(F.col("doc_id").alias("id_b"))
-    cand = a.crossJoin(b).filter(F.col("id_a") < F.col("id_b"))
+    return a.crossJoin(b).filter(F.col("id_a") < F.col("id_b"))
+
+
+def test_sig_jaccard_equals_string_set_jaccard(spark, docs):
+    """The int64-fingerprint verify path over the in-pass signatures of
+    minhash_doc_table must reproduce exact string-set Jaccard (collision
+    probability ~1e-14 — any mismatch here is a bug, not a collision)."""
+    sig = D.minhash_doc_table(docs, "doc_id", "text", with_sig=True)
     got = {
         (r.id_a, r.id_b): r.jacc
-        for r in D.verify_pairs_jaccard(
-            docs, cand, "doc_id", "text", D.shingle_sig_udf(8), threshold=0.0
+        for r in D.verify_pairs_sig(
+            sig.select("id", "sig"), _all_pairs(docs), threshold=0.0
         ).collect()
     }
     texts = dict(DOCS)
-
-    def sh(t):
-        return {t[i : i + 8] for i in range(max(1, len(t) - 7))}
-
     assert len(got) == 6
     for (ia, ib), j in got.items():
-        sa, sb = sh(texts[ia]), sh(texts[ib])
+        sa, sb = D._py_char_shingles(texts[ia], 8), D._py_char_shingles(texts[ib], 8)
         assert j == round(len(sa & sb) / len(sa | sb), 6), (ia, ib)
 
 
-def test_minhash_doc_table_sig_matches_sig_udf(spark, docs):
-    """The combined kernel's in-pass signature must equal the standalone
-    shingle_sig_udf fingerprints (same md5-prefix definition)."""
+def test_verify_pairs_jaccard_is_word_bigram_jaccard(spark, docs):
+    """d4's verify step equals Python set Jaccard of word 2-grams."""
+    got = {
+        (r.id_a, r.id_b): r.jacc
+        for r in D.verify_pairs_jaccard(
+            docs, _all_pairs(docs), "doc_id", "text", threshold=0.0
+        ).collect()
+    }
+    texts = dict(DOCS)
+    assert len(got) == 6
+    for (ia, ib), j in got.items():
+        sa, sb = D._py_word_ngrams(texts[ia], 2), D._py_word_ngrams(texts[ib], 2)
+        assert j == round(len(sa & sb) / len(sa | sb), 6), (ia, ib)
+
+
+def test_minhash_doc_table_sig_matches_driver_fingerprints(spark, docs):
+    """The combined kernel's in-pass signature equals the driver-side
+    fingerprint of each doc's shingle set (same md5-prefix definition)."""
     from_doc = {
         r.id: list(r.sig)
         for r in D.minhash_doc_table(docs, "doc_id", "text", with_sig=True).collect()
     }
-    standalone = {
-        r.doc_id: list(r.sig)
-        for r in docs.select(
-            "doc_id", D.shingle_sig_udf(8)(F.col("text")).alias("sig")
-        ).collect()
+    assert from_doc == {
+        i: list(D._hash_sig(D._py_char_shingles(t, 8))) for i, t in DOCS
     }
-    assert from_doc == standalone
 
 
 def test_passage_dup_stats(spark):

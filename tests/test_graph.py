@@ -2,6 +2,10 @@
 
 from __future__ import annotations
 
+import pytest
+from hypothesis import HealthCheck, example, given, settings
+from hypothesis import strategies as st
+
 from juniper_syslog_filter_spark.operators.graph import (
     connected_components,
     dup_clusters,
@@ -151,68 +155,90 @@ def test_pagerank_one_iter_equals_step(spark):
         assert abs(full[k] - step[k]) < 1e-9, (k, full[k], step[k])
 
 
-def test_star_matches_propagation(spark):
-    """algorithm='star' (large-star/small-star, Kiveris SoCC'14) must
-    produce the identical labelling as min-label propagation."""
-    edges = [(1, 2), (2, 3), (10, 11), (5, 2), (40, 41), (41, 42), (42, 40)]
+# Node ids drawn from a small range so random pairs collide into shared
+# components; chains are paths through distinct nodes (long diameter).
+_node = st.integers(min_value=0, max_value=40)
+
+
+def _union_find_minima(edges) -> dict[int, int]:
+    """Driver-side oracle: node -> smallest node id in its component."""
+    parent: dict[int, int] = {}
+
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return {x: find(x) for x in parent}
+
+
+@given(
+    pairs=st.lists(st.tuples(_node, _node), max_size=25),
+    chains=st.lists(
+        st.lists(_node, min_size=2, max_size=15, unique=True), max_size=3
+    ),
+    repeats=st.lists(st.tuples(st.integers(0, 10_000), st.booleans()), max_size=8),
+)
+@example(pairs=[(3, 3), (1, 2), (2, 1), (1, 2)], chains=[], repeats=[])
+@settings(max_examples=8, deadline=None, suppress_health_check=[HealthCheck.too_slow])
+def test_connected_components_matches_union_find(spark, pairs, chains, repeats):
+    """Random pair lists with self-pairs, duplicate and reversed pairs,
+    and chains: every node is labelled with its component minimum, as a
+    pure-Python union-find computes it."""
+    edges = pairs + [(c[i], c[i + 1]) for c in chains for i in range(len(c) - 1)]
+    for i, flip in repeats if edges else []:
+        a, b = edges[i % len(edges)]
+        edges.append((b, a) if flip else (a, b))
     df = spark.createDataFrame(edges, "id_a: long, id_b: long")
-    prop = {
+    got = {
         r["node"]: r["cluster_id"]
         for r in connected_components(df, "id_a", "id_b").collect()
     }
-    star = {
-        r["node"]: r["cluster_id"]
-        for r in connected_components(
-            df, "id_a", "id_b", algorithm="star"
-        ).collect()
-    }
-    assert star == prop
-    assert star[3] == 1 and star[5] == 1 and star[40] == 40
+    assert got == _union_find_minima(edges)
 
 
 def test_star_self_pairs_and_singleton_nodes(spark):
-    """Self-pairs keep their node in the census; star must label them
-    with themselves (the propagation variant's self-loop behaviour)."""
+    """Self-pairs keep their node in the census; it is labelled with
+    itself."""
     df = spark.createDataFrame([(3, 3), (1, 2)], "id_a: long, id_b: long")
     got = {
         r["node"]: r["cluster_id"]
-        for r in connected_components(
-            df, "id_a", "id_b", algorithm="star"
-        ).collect()
+        for r in connected_components(df, "id_a", "id_b").collect()
     }
     assert got == {3: 3, 1: 1, 2: 1}
 
 
-def test_star_converges_logarithmically_on_path(spark):
-    """Adversarial long chain (diameter = n): star needs O(log² n)
-    rounds where propagation needs O(n). On a 200-node path, star must
-    converge (correctly) within 12 rounds; propagation capped at the
-    same 12 rounds must NOT have finished labelling."""
-    n = 200
-    df = spark.createDataFrame(
+def _path(spark, n):
+    return spark.createDataFrame(
         [(i, i + 1) for i in range(n - 1)], "id_a: long, id_b: long"
     )
-    rounds: list[int] = []
-    star = {
-        r["node"]: r["cluster_id"]
-        for r in connected_components(
-            df, "id_a", "id_b", max_iter=12, algorithm="star", rounds_out=rounds
-        ).collect()
-    }
-    assert star == {i: 0 for i in range(n)}
-    assert rounds[0] <= 12, f"star took {rounds[0]} rounds on a {n}-path"
 
-    prop_rounds: list[int] = []
-    prop = {
+
+def test_star_converges_logarithmically_on_path(spark):
+    """Adversarial long chain (diameter = n): large-star/small-star needs
+    O(log² n) rounds, so a 200-node path reaches its fixpoint (no raise)
+    within 12 rounds, with every node labelled 0."""
+    n = 200
+    got = {
         r["node"]: r["cluster_id"]
         for r in connected_components(
-            df, "id_a", "id_b", max_iter=12, rounds_out=prop_rounds
+            _path(spark, n), "id_a", "id_b", max_iter=12
         ).collect()
     }
-    # label 0 moves one hop per round: after 12 rounds the far end of
-    # the chain cannot yet carry the component minimum.
-    assert prop[n - 1] != 0
-    assert prop_rounds[0] == 12
+    assert got == {i: 0 for i in range(n)}
+
+
+def test_no_fixpoint_within_max_iter_raises(spark):
+    """Running out of rounds raises instead of returning labels that are
+    not yet component minima."""
+    with pytest.raises(RuntimeError, match="no fixpoint after 2 rounds"):
+        connected_components(_path(spark, 200), "id_a", "id_b", max_iter=2)
 
 
 def test_pagerank_dangling_mass_conserved(spark):
@@ -272,26 +298,23 @@ def test_star_evicts_checkpoint_blocks_per_round(spark):
     edge-set copies (sym, ls, new_edges) and, before the fix, never
     unpersisted them — executors accumulated O(rounds) blocks. After
     convergence only the fixpoint edge set + node census (plus whatever
-    was persisted before the call) may remain."""
+    was persisted before the call) may remain; a run that raises keeps
+    none."""
     from juniper_syslog_filter_spark.operators.graph import (
         _persistent_rdd_ids,
     )
 
-    n = 200  # path graph → multiple star rounds
-    df = spark.createDataFrame(
-        [(i, i + 1) for i in range(n - 1)], "id_a: long, id_b: long"
-    )
+    df = _path(spark, 200)
     before = _persistent_rdd_ids(spark)
-    rounds: list[int] = []
-    cc = connected_components(
-        df, "id_a", "id_b", algorithm="star", rounds_out=rounds
-    )
+    # The path needs more than 3 rounds: stopping there raises.
+    with pytest.raises(RuntimeError):
+        connected_components(df, "id_a", "id_b", max_iter=3)
+    assert _persistent_rdd_ids(spark) - before == set()
+    cc = connected_components(df, "id_a", "id_b")
     cc.count()  # materialize the returned plan
     leaked = _persistent_rdd_ids(spark) - before
-    assert rounds[0] >= 3, "path graph should need several rounds"
     # final edges + nodes = 2 live checkpoints; anything O(rounds) is
     # the leak this test guards against.
     assert len(leaked) <= 2, (
-        f"{len(leaked)} checkpointed RDDs survive {rounds[0]} rounds: "
-        f"{sorted(leaked)}"
+        f"{len(leaked)} checkpointed RDDs survive: {sorted(leaked)}"
     )

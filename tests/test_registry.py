@@ -11,8 +11,8 @@ from juniper_syslog_filter_spark.driver_queries import ORACLE_SQL, QUERIES
 
 
 def test_every_query_but_st1_has_an_oracle():
-    assert len(QUERIES) == 124
-    assert len(ORACLE_SQL) == 123
+    assert len(QUERIES) == 123
+    assert len(ORACLE_SQL) == 122
     assert set(QUERIES) - set(ORACLE_SQL) == {"st1_sessionize_stream"}
     assert set(ORACLE_SQL) <= set(QUERIES)
 

@@ -39,6 +39,9 @@ def test_brute_force_topk_matches_numpy(emb):
     }
     expect = sorted(sims.items(), key=lambda kv: (-round(kv[1], 6), kv[0]))[:5]
     assert [r.vec_id for r in got] == [i for i, _ in expect]
+    # non-embedding columns pass through (query s1 reports label)
+    assert got[0].asDict().keys() == {"vec_id", "label", "cos_sim"}
+    assert [r.label for r in got] == [i % 4 for i, _ in expect]
     for r, (_, s) in zip(got, expect):
         assert abs(r.cos_sim - round(s, 6)) <= 1e-6
 
