@@ -51,15 +51,18 @@ def _no_csv_archives(d, n: int) -> None:
             z.writestr("readme.txt", "no csv member")
 
 
-@pytest.mark.parametrize("path", ["per_member", "per_archive"])
-def test_zip_extraction_rows_and_error_isolation(spark, zip_dir, path):
-    """Fewer archives than cores (the fixture's 3 under local[4]) take
-    the per-member fan-out; padding to the core count with csv-less
-    archives takes the per-archive path. Both isolate the same errors."""
-    n_fill = spark.sparkContext.defaultParallelism - 3 if path == "per_archive" else 0
+@pytest.mark.parametrize("per_member", [None, True, False])
+def test_zip_extraction_rows_and_error_isolation(spark, zip_dir, per_member):
+    """Both read paths isolate the same errors; each is reached through
+    its input. None leaves the fixture's 3 archives to the auto rule
+    (per-member under local[4]); True pads with csv-less archives to one
+    below the core count, the most the per-member fan-out takes; False
+    pads to the core count, which takes the per-archive path."""
+    cores = spark.sparkContext.defaultParallelism
+    n_fill = {None: 0, True: cores - 1 - 3, False: cores - 3}[per_member]
     _no_csv_archives(zip_dir, n_fill)
     df = extract_zip_csvs(spark, zip_dir)
-    assert _reads_archive_blobs(df) == (path == "per_archive")
+    assert _reads_archive_blobs(df) == (per_member is False)
     good = df.filter(F.col("_error") == "")
     bad = df.filter(F.col("_error") != "")
     assert good.count() == 3
