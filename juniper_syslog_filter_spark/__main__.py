@@ -38,7 +38,6 @@ def main(argv: list[str] | None = None) -> int:
         choices=["EMERGENCY", "ALERT", "CRITICAL", "ERROR", "WARNING", "NOTICE", "INFO", "DEBUG"],
         help="route only this severity (reference Phase 10)",
     )
-    r.add_argument("--files-per-sink", type=int, default=4)
     r.add_argument("--full", action="store_true", help="ignore checkpoint; reprocess everything")
 
     from .stages import STAGES
@@ -120,7 +119,6 @@ def main(argv: list[str] | None = None) -> int:
             args.out,
             keyword=args.keyword,
             severity_filter=args.severity,
-            files_per_sink=args.files_per_sink,
             incremental=not args.full,
         )
         print(

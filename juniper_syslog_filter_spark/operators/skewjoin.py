@@ -24,8 +24,9 @@ it ahead of time, at plan-build:
   is why the driver oracle for ``sj1`` is the unsalted SQL join.
 
 The reference repo has no joins at all (SURVEY.md §2.6); this operator
-belongs to the added web-scale family, alongside the salted fan-out
-repartition in ``pipeline.py:49`` (same xxhash64 spread, write path).
+belongs to the added web-scale family. The pipeline's fan-out write
+needs no salt: its ``REBALANCE`` exchange lets AQE split a large sink
+at run time (``pipeline.route_repartition``).
 
 100-TB notes: prefer ``broadcast(dim)`` when the dim fits — salting
 costs a dim blow-up and a wider exchange. When neither side broadcasts,

@@ -108,8 +108,9 @@ def build_session(
         )
         # Commit algorithm v2: task output moves to the destination at
         # task commit instead of a serial driver-side rename pass at job
-        # commit — the fan-out write produces O(sinks × files_per_sink)
-        # files, so v1's driver loop is a measurable serial tail.
+        # commit — the fan-out write produces at least one file per sink
+        # (more where AQE splits a large one), so v1's driver loop is a
+        # measurable serial tail.
         .config("spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version", "2")
         .config("spark.ui.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")

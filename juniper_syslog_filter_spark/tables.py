@@ -56,10 +56,11 @@ def write_table(
         else:
             writer.overwritePartitions()
         return
-    # Parquet path fallback: dynamic partition overwrite ≈ overwritePartitions.
-    if mode == "overwrite_partitions":
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+    # Parquet path fallback: dynamic partition overwrite ≈ overwritePartitions,
+    # set on this write only so later overwrites in the session stay static.
     w = df.write.mode("append" if mode == "append" else "overwrite")
+    if mode == "overwrite_partitions":
+        w = w.option("partitionOverwriteMode", "dynamic")
     if partition_cols:
         w = w.partitionBy(*partition_cols)
     w.parquet(identifier)

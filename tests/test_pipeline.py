@@ -3,6 +3,7 @@ row-set equality, aggregate==sink-count invariant, idempotent resume."""
 
 from __future__ import annotations
 
+import glob
 import re
 
 import numpy as np
@@ -97,6 +98,46 @@ def test_pipeline_counts_and_rowsets(spark, pages_path, tmp_path):
         assert exp_sink[(r.Severity, r.lang)] == r["count"]
 
 
+def _files_per_sink(routed_path: str) -> dict[tuple[str, str], int]:
+    counts: dict[tuple[str, str], int] = {}
+    for f in glob.glob(f"{routed_path}/batch=*/Severity=*/lang=*/*.parquet"):
+        sev, lang = (part.split("=", 1)[1] for part in f.split("/")[-3:-1])
+        counts[(sev, lang)] = counts.get((sev, lang), 0) + 1
+    return counts
+
+
+def test_route_sizes_writers_by_sink_bytes(spark, pages_path, tmp_path):
+    """AQE sizes the fan-out writers: at the default advisory partition
+    size every (Severity, lang) sink is one file; once the largest sink
+    outgrows a lowered advisory size it is split across map-output
+    ranges into several files. Per-sink row counts match the oracle
+    either way."""
+    oracle = _oracle(gen_pages_pandas(np.arange(N), seed=42))
+    exp_sink = oracle.groupby(["Severity", "lang"]).size().to_dict()
+
+    def sink_rows(res):
+        routed = spark.read.parquet(res.routed_path)
+        return {(r.Severity, r.lang): r["count"] for r in routed.groupBy("Severity", "lang").count().collect()}
+
+    res = run_pipeline(spark, pages_path, str(tmp_path / "default"))
+    files = _files_per_sink(res.routed_path)
+    assert set(files) == set(exp_sink)
+    assert set(files.values()) == {1}
+    assert sink_rows(res) == exp_sink
+
+    key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "1k")
+    try:
+        res = run_pipeline(spark, pages_path, str(tmp_path / "split"))
+    finally:
+        spark.conf.set(key, old)
+    files = _files_per_sink(res.routed_path)
+    largest = max(exp_sink, key=exp_sink.get)
+    assert files[largest] > 1
+    assert sink_rows(res) == exp_sink
+
+
 def test_keyword_and_severity_params(spark, pages_path, tmp_path):
     out = str(tmp_path / "out_kw")
     res = run_pipeline(
@@ -137,7 +178,6 @@ def test_crash_between_write_and_commit_replaces_not_duplicates(
     commit must be replaced, never duplicated, on re-run — the pending
     set is unchanged, so the deterministic batch id recurs and dynamic
     partition overwrite swaps the same batch partitions."""
-    import glob
     import os
 
     out = str(tmp_path / "out_crash")

@@ -1,6 +1,7 @@
 """Physical-plan audits: assert the optimizations the 100-TB design
 depends on actually appear in the executed plan — partition pruning on
-the route-partitioned sink, parquet filter/column pushdown, broadcast
+the route-partitioned sink, one REBALANCE exchange on the sink keys
+ahead of the fan-out write, parquet filter/column pushdown, broadcast
 (not sort-merge) dim joins, the keyword prefilter in the scan stage
 ahead of the regex parse and no Python in the pipeline, map-side
 partial aggregation, no nested-loop joins in the banded range join, and
@@ -9,6 +10,8 @@ these is invisible at test scale but fatal at cluster scale, which is
 exactly why they're pinned here."""
 
 from __future__ import annotations
+
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -47,6 +50,35 @@ def test_routed_sink_partition_pruning(spark, tmp_path):
     pf = plan.split("PartitionFilters: [")[1].split("]")[0]
     assert "Severity" in pf
     assert q.count() > 0
+
+
+def test_route_is_one_rebalance_exchange_on_the_sink_keys(spark, tmp_path, monkeypatch):
+    """The routed write's one wide dependency is a REBALANCE exchange
+    hashed on exactly (Severity, lang): AQE may coalesce small sinks and
+    split large ones only under that exchange, and no salt term caps a
+    sink's writer count."""
+    from juniper_syslog_filter_spark import pipeline
+
+    routed = []
+    route = pipeline.route_repartition
+
+    def recording_route(*args, **kwargs):
+        routed.append(route(*args, **kwargs))
+        return routed[-1]
+
+    monkeypatch.setattr(pipeline, "route_repartition", recording_route)
+    pages = str(tmp_path / "pages")
+    write_pages(spark, pages, 500, num_partitions=2)
+    pipeline.run_pipeline(spark, pages, str(tmp_path / "out"), incremental=False)
+    assert len(routed) == 1
+    plan = _plan(routed[0])
+    # shuffle exchanges only; the two dims arrive by BroadcastExchange
+    exchanges = re.findall(r"(?<![A-Za-z])Exchange .*", plan)
+    assert len(exchanges) == 1, exchanges
+    assert "REBALANCE_PARTITIONS_BY_COL" in exchanges[0]
+    keys = exchanges[0].split("hashpartitioning(")[1].split(")")[0].split(", ")
+    assert [k.split("#")[0] for k in keys[:-1]] == ["Severity", "lang"]
+    assert "xxhash64" not in plan
 
 
 def test_parquet_scan_pushdown_and_pruning(spark):

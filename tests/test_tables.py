@@ -21,6 +21,8 @@ def test_write_read_roundtrip_partitioned(spark, tmp_path):
 
 
 def test_overwrite_partitions_replaces_only_touched(spark, tmp_path):
+    conf_key = "spark.sql.sources.partitionOverwriteMode"
+    conf_before = spark.conf.get(conf_key)
     path = str(tmp_path / "t2")
     base = spark.createDataFrame(
         [("CRITICAL", 1), ("WARNING", 2)], "Severity string, v int"
@@ -31,6 +33,16 @@ def test_overwrite_partitions_replaces_only_touched(spark, tmp_path):
     write_table(delta, path, ["Severity"], mode="overwrite_partitions")
     got = {tuple(r) for r in read_table(spark, path).select("Severity", "v").collect()}
     assert got == {("CRITICAL", 9), ("WARNING", 2)}
+    # The dynamic mode belongs to that one write: the session is untouched,
+    # so a later 'replace' elsewhere still drops every old partition.
+    assert spark.conf.get(conf_key) == conf_before
+    other = str(tmp_path / "t3")
+    first = spark.createDataFrame([("INFO", 1), ("CRITICAL", 2)], "Severity string, v int")
+    write_table(first, other, ["Severity"], mode="replace")
+    second = spark.createDataFrame([("DEBUG", 3)], "Severity string, v int")
+    write_table(second, other, ["Severity"], mode="replace")
+    got = {tuple(r) for r in read_table(spark, other).select("Severity", "v").collect()}
+    assert got == {("DEBUG", 3)}
 
 
 def test_have_iceberg_is_false_in_sandbox(spark):
