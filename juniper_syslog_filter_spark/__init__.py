@@ -10,9 +10,10 @@ designed for 1000-executor / 100 TB scale:
 * parse: Catalyst regex expressions, Unicode-exact to Python ``re``
   (byte-identical extraction vs the reference's ``pandas.str.extract``)
 * enrich: broadcast lookup joins (severity class, device metadata)
-* route: explicit repartition + partitioned fan-out writes
+* route: a REBALANCE on (Severity, lang) + partitioned fan-out writes
 * aggregate: hash groupBy with partial (map-side) aggregation
-* ops: url-hash bucketing, host salting, AQE, checkpoint/lineage table
+* ops: AQE, bucketed table writes, a salted skew join (sj1),
+  checkpoint/lineage table
 """
 
 __version__ = "0.1.0"

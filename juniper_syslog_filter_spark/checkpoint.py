@@ -11,11 +11,15 @@ Idempotency protocol (SURVEY §7.4.5):
 1. work units = input data files (stable paths);
 2. pending = listed files minus ``completed_units()``;
 3. a batch id is the sha1 of the sorted pending list → deterministic;
-4. sink writes are keyed by ``batch=<id>`` partition values under
-   dynamic partition-overwrite, so a crashed batch is *replaced*, never
-   duplicated, when the same pending set is reprocessed;
+4. sink writes append ``batch=<id>`` partitions, and before writing a
+   run deletes every sink batch with no committed lineage row: those
+   units are pending again, so a crashed batch is *replaced*, never
+   duplicated, even when new input files change the pending set and
+   with it the batch id. ``--full`` first deletes the log itself, so
+   every batch is uncommitted and a crash at any later point leaves
+   every unit pending;
 5. the checkpoint append is the final step — its absence is the signal
-   to redo the (overwrite-safe) batch.
+   to redo the batch.
 """
 
 from __future__ import annotations
@@ -37,24 +41,36 @@ class CheckpointTable:
         self.spark = spark
         self.path = path
 
-    def completed_units(self) -> set[str]:
-        """Units with a committed lineage row, read the way :meth:`commit`
-        writes them: driver-side with pyarrow on a local path (no Spark
-        job in the serial tail), else a Spark read that names LOG_SCHEMA
-        so nothing is inferred. A fresh output dir has no log yet."""
+    def committed(self) -> set[tuple[str, str]]:
+        """(batch_id, unit) of every committed lineage row, read the way
+        :meth:`commit` writes them: driver-side with pyarrow on a local
+        path (no Spark job in the serial tail), else a Spark read that
+        names LOG_SCHEMA so nothing is inferred. A fresh output dir has
+        no log yet."""
         local = _local_path(self.path)
         if local is not None:
             import pyarrow.parquet as pq
 
-            units: set[str] = set()
+            rows: set[tuple[str, str]] = set()
             for f in glob.glob(os.path.join(local, "*.parquet")):
-                units.update(pq.read_table(f, columns=["unit"])["unit"].to_pylist())
-            return units
+                t = pq.read_table(f, columns=["batch_id", "unit"])
+                rows.update(zip(t["batch_id"].to_pylist(), t["unit"].to_pylist()))
+            return rows
         fs, p = _fs_path(self.spark, self.path)
         if not fs.exists(p):
             return set()
         log = self.spark.read.schema(LOG_SCHEMA).parquet(self.path)
-        return {r.unit for r in log.select("unit").distinct().collect()}
+        return {(r.batch_id, r.unit) for r in log.select("batch_id", "unit").distinct().collect()}
+
+    def completed_units(self) -> set[str]:
+        """Units with a committed lineage row."""
+        return {u for _, u in self.committed()}
+
+    def clear(self) -> None:
+        """Delete every lineage row: each commit file goes whole, so a
+        crash part-way leaves the log a set of complete commits."""
+        fs, p = _fs_path(self.spark, self.path)
+        fs.delete(p, True)
 
     def commit(self, rows: list[dict]) -> None:
         """Atomic-enough append: one small parquet file per commit.
@@ -130,14 +146,36 @@ def _fs_path(spark: SparkSession, path: str):
     return p.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration()), p
 
 
+def _hidden(name: str) -> bool:
+    """A path component Spark's directory reader skips: ``_temporary``
+    task attempts, ``_SUCCESS``, dot-prefixed in-progress files. A
+    ``_``-prefixed name with ``=`` is a partition directory."""
+    return name.startswith(".") or (name.startswith("_") and "=" not in name)
+
+
 def list_parquet_files(spark: SparkSession, path: str) -> list[tuple[str, int]]:
-    """(file_path, size) for every data file under a parquet table path."""
+    """(file_path, size) for every committed data file under a parquet
+    table path: exactly the files ``spark.read.parquet(path)`` reads, so
+    no hidden component below the root names an uncommitted file."""
     fs, p = _fs_path(spark, path)
+    root = len(fs.makeQualified(p).toString())
     out: list[tuple[str, int]] = []
     it = fs.listFiles(p, True)
     while it.hasNext():
         st = it.next()
         fp = st.getPath().toString()
-        if fp.endswith(".parquet"):
+        if fp.endswith(".parquet") and not any(map(_hidden, fp[root:].split("/"))):
             out.append((fp, st.getLen()))
     return sorted(out)
+
+
+def delete_batches(spark: SparkSession, table_path: str, keep: set[str]) -> None:
+    """Delete every ``batch=<id>`` partition of a sink table whose id is
+    not in ``keep``: one listing of the table root, no Spark job."""
+    fs, p = _fs_path(spark, table_path)
+    if not fs.exists(p):
+        return
+    for st in fs.listStatus(p):
+        name = st.getPath().getName()
+        if name.startswith("batch=") and name[len("batch="):] not in keep:
+            fs.delete(st.getPath(), True)

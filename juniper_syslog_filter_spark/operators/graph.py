@@ -19,18 +19,13 @@ Scale design (the 100-TB lens):
 
 * Each phase is one partial-aggregated grouped ``min`` plus one join
   back; neither phase ever grows the edge count.
-* Shuffle width is sized to the GRAPH, not the session default: a
-  verified dup-pair graph is orders of magnitude smaller than the
-  corpus that produced it (477 nodes from 240 k docs at sf0.1), and a
-  round over a few thousand edges must not pay 32 shuffle tasks of
-  scheduling overhead. One ``count`` on the checkpointed pair list
-  picks ``ceil(|E| / 200k)`` partitions, clamped to 4× cluster
-  parallelism — at 100 TB the same rule widens the rounds to match the
-  (still corpus-dwarfed) pair volume. Under AQE (which
+* No phase sizes its own shuffle. Under AQE (which
   ``session.build_session`` turns on) a ``localCheckpoint`` reports
-  unknown partitioning, so the consumers of each checkpoint re-exchange
-  it at the session width, AQE-coalesced: the sized repartition does
-  not carry over to them.
+  unknown partitioning, so every consumer of a round's checkpoint
+  re-exchanges it anyway; AQE then coalesces that exchange to the
+  measured bytes of the graph, which is orders of magnitude smaller
+  than the corpus that produced it (477 nodes from 240 k docs at
+  sf0.1).
 * ``localCheckpoint`` truncates lineage each round; without it the
   plan doubles per iteration and the driver OOMs planning round ~15.
   (Same rationale as dedup.py's signature materialization.) Each
@@ -49,29 +44,16 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def _persistent_rdd_ids(spark) -> set:
-    """Ids of every RDD currently persisted on this SparkContext.
+def _evict(*dfs: DataFrame) -> None:
+    """Free the blocks of each ``localCheckpoint``-ed frame.
 
-    ``DataFrame.localCheckpoint`` persists an internal RDD but hands
-    back no handle to it, so per-round eviction in the connected-
-    components loop is done by diffing these snapshots
-    (``JavaSparkContext.getPersistentRDDs`` is the public Scala API
-    surfaced through the py4j gateway — there is no PySpark-level
-    equivalent)."""
-    jmap = spark.sparkContext._jsc.getPersistentRDDs()
-    return {int(k) for k in jmap.keySet().toArray()}
-
-
-def _unpersist_ids(spark, ids) -> None:
-    """Non-blocking unpersist of the given RDD ids (no-op for ids that
-    already vanished). Unpersisting a localCheckpointed RDD frees its
-    blocks AND makes it uncomputable (lineage was truncated) — callers
-    must only pass ids no live plan still references."""
-    jmap = spark.sparkContext._jsc.getPersistentRDDs()
-    for i in ids:
-        jrdd = jmap.get(i)
-        if jrdd is not None:
-            jrdd.unpersist(False)
+    A checkpointed DataFrame's logical plan is a ``LogicalRDD`` over the
+    persisted RDD, so unpersisting that RDD frees exactly this
+    checkpoint and nothing else. The frame is uncomputable afterwards
+    (its lineage was truncated): pass only frames no live plan still
+    reads."""
+    for df in dfs:
+        df._jdf.logicalPlan().rdd().unpersist(False)
 
 
 def connected_components(
@@ -108,22 +90,12 @@ def connected_components(
     |new| == |old| plus an empty anti-join — two graph-sized metadata
     jobs per round.
     """
-    spark = pairs.sparkSession
-    # Checkpoint-block hygiene: PySpark's DataFrame.localCheckpoint
-    # returns no RDD handle, so without explicit eviction each round
-    # would LEAK ~3 checkpointed copies of the edge set on executors
-    # (sym + ls + new_edges) for the life of the context. We snapshot
-    # SparkContext.getPersistentRDDs() around each checkpoint and
-    # unpersist a round's intermediates (plus the previous round's edge
-    # set) once the round's outputs are materialized. The snapshot
-    # windows are tight and assume no CONCURRENT persist on this
-    # SparkContext inside them (true for the one-query-at-a-time
-    # driver); a missed id merely delays eviction to context shutdown.
-    ids_a = _persistent_rdd_ids(spark)
+    # DataFrame.localCheckpoint persists an RDD and never frees it, so
+    # each round evicts what it has consumed (sym, ls and the previous
+    # edge set): executor block usage stays O(1) in the round count.
     p0 = pairs.select(
         F.col(src_col).alias("u"), F.col(dst_col).alias("v")
     ).localCheckpoint()
-    ids_b = _persistent_rdd_ids(spark)
     # Node census BEFORE dropping self-pairs: isolated nodes that appear
     # only as (x, x) pairs must still be labelled (with themselves).
     nodes = (
@@ -132,12 +104,6 @@ def connected_components(
         .distinct()
         .localCheckpoint()
     )
-    n_edges = p0.count()
-    parts = max(
-        1,
-        min(4 * spark.sparkContext.defaultParallelism, n_edges // 200_000 + 1),
-    )
-    ids_c = _persistent_rdd_ids(spark)
     # Canonical form: (big, small), self-loops dropped — both phases
     # re-derive the directions they need from this single set.
     edges = (
@@ -145,32 +111,21 @@ def connected_components(
         .select(
             F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v")
         )
-        .repartition(parts, "u")
         .distinct()
         .localCheckpoint()
     )
-    ids_d = _persistent_rdd_ids(spark)
+    _evict(p0)
     prev_count = edges.count()
-    # p0 is fully consumed (nodes and edges are both eager checkpoints).
-    _unpersist_ids(spark, ids_b - ids_a)
-    prev_edge_ids = ids_d - ids_c
 
     for _ in range(max_iter):
         # -- large-star: full neighbourhoods need both directions.
         # The symmetrized set is materialized ONCE for its two consumers
         # (the min aggregate and the join probe) instead of being
         # recomputed per consumer (measured at sf0.1 on the 32-vCPU
-        # host: 5.27 s → 4.68 s). Under AQE the checkpoint reports
-        # unknown partitioning, so each consumer re-exchanges it on u.
-        ids_r0 = _persistent_rdd_ids(spark)
-        sym = (
-            edges.union(
-                edges.select(F.col("v").alias("u"), F.col("u").alias("v"))
-            )
-            .repartition(parts, "u")
-            .localCheckpoint()
-        )
-        ids_r1 = _persistent_rdd_ids(spark)
+        # host: 5.27 s → 4.68 s).
+        sym = edges.union(
+            edges.select(F.col("v").alias("u"), F.col("u").alias("v"))
+        ).localCheckpoint()
         mins = (
             sym.groupBy("u")
             .agg(F.min("v").alias("mv"))
@@ -180,11 +135,9 @@ def connected_components(
             sym.join(mins, "u")
             .where(F.col("v") > F.col("u"))
             .select(F.col("v").alias("u"), F.col("m").alias("v"))
-            .repartition(parts, "u")
             .distinct()
             .localCheckpoint()
         )
-        ids_r2 = _persistent_rdd_ids(spark)
         # -- small-star: ls is already canonical (u > v everywhere).
         minss = ls.groupBy("u").agg(F.min("v").alias("m"))
         ss = (
@@ -193,10 +146,7 @@ def connected_components(
             .select(F.col("v").alias("u"), F.col("m").alias("v"))
             .union(minss.select(F.col("u"), F.col("m").alias("v")))
         )
-        new_edges = (
-            ss.repartition(parts, "u").distinct().localCheckpoint()
-        )
-        ids_r3 = _persistent_rdd_ids(spark)
+        new_edges = ss.distinct().localCheckpoint()
         new_count = new_edges.count()
         unchanged = (
             new_count == prev_count
@@ -205,19 +155,12 @@ def connected_components(
             .count()
             == 0
         )
-        # sym and ls are fully consumed (ls / new_edges are eager
-        # checkpoints) and the previous round's edge set has served the
-        # fixpoint anti-join — evict all three so executor block usage
-        # stays O(1) in the round count instead of O(rounds).
-        _unpersist_ids(
-            spark, (ids_r1 - ids_r0) | (ids_r2 - ids_r1) | prev_edge_ids
-        )
-        prev_edge_ids = ids_r3 - ids_r2
+        _evict(sym, ls, edges)
         edges, prev_count = new_edges, new_count
         if unchanged:
             break
     else:
-        _unpersist_ids(spark, prev_edge_ids | (ids_c - ids_b))
+        _evict(edges, nodes)
         raise RuntimeError(
             f"connected_components: no fixpoint after {max_iter} rounds"
         )
@@ -268,16 +211,14 @@ def pagerank_step(
 
     Scale design (the 100-TB lens): the node census is one
     distinct-union shuffle; weighted out-degree is a partial aggregate
-    (map-side combine) on ``src``; the contribution join co-shuffles
-    edges and out-degrees on the SAME src key (no extra exchange for
-    the join's right side — Spark reuses the aggregation's
-    partitioning, and at web scale a host-keyed edge layout makes it
-    map-side); the in-sum is one partial aggregate on ``dst``; the
-    final left join back to nodes keeps sink-only nodes (they still
-    earn the teleport term). N enters via a broadcast 1-row aggregate,
-    never a ``collect``. Iterating = re-running with ranks joined in
-    place of the uniform term plus per-round ``localCheckpoint``
-    lineage truncation, exactly as :func:`connected_components` does.
+    (map-side combine) on ``src``; the contribution join is keyed on
+    ``src`` and AQE picks its strategy; the in-sum is one partial
+    aggregate on ``dst``; the final left join back to nodes keeps
+    sink-only nodes (they still earn the teleport term). N enters via a
+    broadcast 1-row aggregate, never a ``collect``. Iterating =
+    re-running with ranks joined in place of the uniform term plus
+    per-round ``localCheckpoint`` lineage truncation, as :func:`pagerank`
+    does.
     """
     w = (F.col(weight).cast("double") if weight else F.lit(1.0)).alias("w")
     e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"), w)
@@ -334,18 +275,22 @@ def pagerank(
     match cannot hinge on float summation order.
 
     Scale design (the 100-TB lens): the transition matrix
-    ``P = edges ⋈ outw`` is built ONCE, checkpointed, and
-    pre-partitioned on ``src`` — every round's rank join then reuses
-    that layout, so each iteration costs exactly one co-partitioned
-    join + one partial-aggregated ``groupBy(dst)`` + the broadcast of
-    the (node-sized, corpus-dwarfed) rank vector update. Ranks are
+    ``P = edges ⋈ outw`` is built ONCE and checkpointed, so each
+    iteration costs one rank join + one partial-aggregated
+    ``groupBy(dst)`` + the broadcast of the (node-sized,
+    corpus-dwarfed) N and dangling terms. Under AQE a checkpoint
+    reports unknown partitioning, so no layout chosen before it
+    survives into the rank join: AQE picks that join's strategy and
+    width from measured bytes each round. Ranks are
     ``localCheckpoint``-ed per round: without truncation the plan
     doubles per iteration (same rationale as
-    :func:`connected_components`). N enters via a broadcast 1-row
-    aggregate, never a ``collect``; the rank vector itself stays a
-    DataFrame end to end.
+    :func:`connected_components`). Each superseded rank vector is
+    evicted once its successor is materialized, and ``e``, the node
+    census, ``P`` and the dangling set before returning: the result is
+    its own checkpoint, so it reads none of them. N enters via a
+    broadcast 1-row aggregate, never a ``collect``; the rank vector
+    itself stays a DataFrame end to end.
     """
-    spark = edges.sparkSession
     w = (F.col(weight).cast("double") if weight else F.lit(1.0)).alias("w")
     e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"), w)
     e = e.localCheckpoint()
@@ -357,12 +302,10 @@ def pagerank(
     )
     n_df = nodes.agg(F.count(F.lit(1)).cast("double").alias("n"))
     outw = e.groupBy("src").agg(F.sum("w").alias("outw"))
-    # Transition rows P(u,v): built once, partitioned on src so each
-    # round's rank join shuffles only the (tiny) rank vector.
+    # Transition rows P(u,v): built once for every round.
     p = (
         e.join(outw, "src")
         .select("src", "dst", (F.col("w") / F.col("outw")).alias("p"))
-        .repartition("src")
         .localCheckpoint()
     )
     ranks = (
@@ -401,7 +344,7 @@ def pagerank(
             )
         else:
             inflow = F.coalesce(F.col("cin"), F.lit(0.0))
-        ranks = (
+        new_ranks = (
             base.join(contrib, base["node"] == contrib["dst"], "left")
             .select(
                 "node",
@@ -411,4 +354,9 @@ def pagerank(
             )
             .localCheckpoint()
         )
+        _evict(ranks)
+        ranks = new_ranks
+    _evict(e, nodes, p)
+    if dangling:
+        _evict(dang)
     return ranks

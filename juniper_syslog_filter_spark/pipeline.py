@@ -20,8 +20,9 @@ Scale design (the part the judge grades):
   filtered re-scans.
 * **Aggregate**: groupBy(Severity, lang, date).count() — partial
   (map-side) agg makes this a few KB of shuffle regardless of input size.
-* **Resume**: file-level checkpoint registry; batch-keyed dynamic
-  partition overwrite makes re-runs idempotent (checkpoint.py).
+* **Resume**: file-level checkpoint registry; a run deletes the sink
+  batches with no committed lineage before it appends its own, so
+  re-runs are idempotent (checkpoint.py).
 """
 
 from __future__ import annotations
@@ -33,7 +34,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from .checkpoint import CheckpointTable, batch_id_for, list_parquet_files
+from .checkpoint import CheckpointTable, batch_id_for, delete_batches, list_parquet_files
 from .datagen import device_dim, severity_dim
 from .enrich import enrich
 from .functions.parse import parse_pages
@@ -127,12 +128,22 @@ def run_pipeline(
     all_files = list_parquet_files(spark, pages_path)
     mark("list+checkpoint-read")
     if incremental:
-        done = ckpt.completed_units()
+        committed = ckpt.committed()
+        done = {u for _, u in committed}
         pending = [(f, s) for f, s in all_files if f not in done]
+        keep = {b for b, _ in committed}
     else:
         pending = all_files
+        keep = set()
     if not pending:
         return PipelineResult(None, 0, 0, 0, routed_path, agg_path)
+    if not incremental:
+        ckpt.clear()  # before the sinks: a crash from here redoes all
+    # A sink batch with no committed lineage row holds rows of units
+    # this run reprocesses: drop it, or a changed pending set (hence
+    # batch id) would duplicate those rows.
+    for sink in (routed_path, agg_path):
+        delete_batches(spark, sink, keep)
 
     unit_paths = [f for f, _ in pending]
     batch = batch_id_for(unit_paths)
@@ -152,8 +163,7 @@ def run_pipeline(
 
     mark("plan-build")
     (
-        routed.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
+        routed.write.mode("append")
         .partitionBy("batch", *ROUTE_KEYS)
         .option("maxRecordsPerFile", 800_000)  # reference chunk cap (run.py:129)
         .parquet(routed_path)
@@ -173,8 +183,7 @@ def run_pipeline(
     )
     agg = aggregate_counts(routed_back).withColumn("batch", F.lit(batch))
     (
-        agg.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
+        agg.write.mode("append")
         .partitionBy("batch")
         .parquet(agg_path)
     )

@@ -232,9 +232,9 @@ def q_lg1_link_extract(spark, sf_dir):
     """)
 def q_gr1_pagerank_step(spark, sf_dir):
     """One PageRank power iteration over the lg1 host graph
-    (operators/graph.pagerank_step): weighted out-degree, co-shuffled
-    contribution join, in-sum, teleport term via a broadcast 1-row N —
-    no driver-side vector, no collect. Host authority is the standard
+    (operators/graph.pagerank_step): weighted out-degree, a contribution
+    join keyed on src (AQE picks its strategy), in-sum, teleport term
+    via a broadcast 1-row N — no driver-side vector, no collect. Host authority is the standard
     crawl-prioritization / quality-weighting signal."""
     edges = q_lg1_link_extract(spark, sf_dir)
     return pagerank_step(
@@ -246,9 +246,9 @@ def q_gr1_pagerank_step(spark, sf_dir):
 def q_gr2_pagerank(spark, sf_dir):
     """Full iterative PageRank (operators/graph.pagerank, 5 power
     iterations) over the lg1 host graph — the converging solver whose
-    single round gr1 isolates. The transition matrix is built once,
-    checkpointed, and pre-partitioned on src; every iteration is one
-    co-partitioned join + one partial aggregate + a per-round
+    single round gr1 isolates. The transition matrix is built once and
+    checkpointed; every iteration is one rank join (AQE picks its
+    strategy and width) + one partial aggregate + a per-round
     ``localCheckpoint`` lineage truncation. The oracle is the same
     recurrence unrolled into 5 CTE layers, so the match is value-exact
     (to the shared round-9 output quantization), not rows-only —

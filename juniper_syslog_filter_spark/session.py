@@ -66,8 +66,8 @@ def build_session(
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master)
-        # AQE: runtime partition coalescing + skew-join splitting — the
-        # north rule's skew handling rests on this plus explicit salting.
+        # AQE: runtime partition coalescing + skew splitting, of joins and
+        # of the route's REBALANCE (an oversized sink gets several writers).
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         # AQE coalesces post-shuffle partitions by BYTE size — a bad cost

@@ -293,6 +293,13 @@ def test_pagerank_dangling_false_unchanged(spark):
     assert abs(got["b"] - ((1 - d) / 2 + d * r1a)) < 1e-12
 
 
+def _persistent_rdd_ids(spark) -> set:
+    """Ids of every RDD persisted on this SparkContext: a function's
+    leftover checkpoints are the difference of two snapshots."""
+    jmap = spark.sparkContext._jsc.getPersistentRDDs()
+    return {int(k) for k in jmap.keySet().toArray()}
+
+
 def test_star_evicts_checkpoint_blocks_per_round(spark):
     """Round-4 advisor finding: each star round localCheckpoints three
     edge-set copies (sym, ls, new_edges) and, before the fix, never
@@ -300,10 +307,6 @@ def test_star_evicts_checkpoint_blocks_per_round(spark):
     convergence only the fixpoint edge set + node census (plus whatever
     was persisted before the call) may remain; a run that raises keeps
     none."""
-    from juniper_syslog_filter_spark.operators.graph import (
-        _persistent_rdd_ids,
-    )
-
     df = _path(spark, 200)
     before = _persistent_rdd_ids(spark)
     # The path needs more than 3 rounds: stopping there raises.
@@ -316,5 +319,25 @@ def test_star_evicts_checkpoint_blocks_per_round(spark):
     # final edges + nodes = 2 live checkpoints; anything O(rounds) is
     # the leak this test guards against.
     assert len(leaked) <= 2, (
+        f"{len(leaked)} checkpointed RDDs survive: {sorted(leaked)}"
+    )
+
+
+def test_pagerank_evicts_its_checkpoints(spark):
+    """pagerank checkpoints its edges, node census, transition rows,
+    dangling set and one rank vector per round; once the result is
+    collected only the result's own checkpoint may remain persisted."""
+    from juniper_syslog_filter_spark.operators.graph import pagerank
+
+    df = spark.createDataFrame(
+        [("a", "b", 1.0), ("b", "c", 2.0), ("a", "c", 1.0), ("c", "d", 1.0)],
+        "src: string, dst: string, w: double",
+    )
+    before = _persistent_rdd_ids(spark)
+    ranks = pagerank(df, weight="w", iters=5, dangling=True)
+    got = {r["node"]: r["rank"] for r in ranks.collect()}
+    assert abs(sum(got.values()) - 1.0) < 1e-9
+    leaked = _persistent_rdd_ids(spark) - before
+    assert len(leaked) == 1, (
         f"{len(leaked)} checkpointed RDDs survive: {sorted(leaked)}"
     )

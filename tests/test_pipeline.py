@@ -176,8 +176,8 @@ def test_crash_between_write_and_commit_replaces_not_duplicates(
     """The idempotency protocol's crash window (checkpoint.py:9-19): a
     batch that dies AFTER the fan-out write but BEFORE the checkpoint
     commit must be replaced, never duplicated, on re-run — the pending
-    set is unchanged, so the deterministic batch id recurs and dynamic
-    partition overwrite swaps the same batch partitions."""
+    set is unchanged, so the deterministic batch id recurs, and the
+    uncommitted batch's partitions are deleted before it is rewritten."""
     import os
 
     out = str(tmp_path / "out_crash")
@@ -221,6 +221,111 @@ def test_incremental_new_files_only(spark, tmp_path):
         spark.read.parquet(f"{out}/agg").agg(F.sum("n")).collect()[0][0]
     )
     assert agg_total == n2
+
+
+def _append_pages(spark, src: str, n: int, seed: int) -> None:
+    from juniper_syslog_filter_spark.datagen import generate_pages
+
+    generate_pages(spark, n, seed=seed, num_partitions=1).write.mode("append").parquet(src)
+
+
+def _sink_totals(spark, out: str) -> tuple[int, int]:
+    routed = spark.read.parquet(f"{out}/routed").count()
+    agg = spark.read.parquet(f"{out}/agg").agg(F.sum("n")).collect()[0][0]
+    return routed, agg
+
+
+def test_listing_skips_uncommitted_files(spark, tmp_path):
+    """A writer's ``_temporary`` attempt file and a dot-prefixed
+    in-progress file are not part of the table: the resume listing names
+    exactly the files a directory read does, and the run routes exactly
+    the rows a directory read yields."""
+    import os
+    import shutil
+    from urllib.parse import urlparse
+
+    from juniper_syslog_filter_spark.checkpoint import list_parquet_files
+    from juniper_syslog_filter_spark.pipeline import build_routed
+
+    src = str(tmp_path / "pages")
+    _append_pages(spark, src, 500, seed=42)
+    _append_pages(spark, src, 300, seed=7)
+    a, b = sorted(glob.glob(f"{src}/*.parquet"))
+    attempt = f"{src}/_temporary/0/_temporary/attempt_0"
+    os.makedirs(attempt)
+    shutil.copy(a, f"{attempt}/{os.path.basename(a)}")
+    shutil.copy(b, f"{src}/.{os.path.basename(b)}")
+
+    def paths(urls):
+        return {urlparse(u).path for u in urls}
+
+    listed = paths(f for f, _ in list_parquet_files(spark, src))
+    assert listed == paths(spark.read.parquet(src).inputFiles())
+    res = run_pipeline(spark, src, str(tmp_path / "out"))
+    assert res.units_processed == 2
+    assert res.rows_routed == build_routed(spark, spark.read.parquet(src)).count()
+
+
+def test_crash_then_new_file_replaces_not_duplicates(spark, tmp_path):
+    """A run dies after its sink writes and before its commit, then a
+    new file arrives: the re-run's pending set (hence batch id) differs,
+    and the crashed batch's partitions must not survive beside it."""
+    import os
+
+    src, out = str(tmp_path / "pages"), str(tmp_path / "out")
+    _append_pages(spark, src, 500, seed=42)
+    run_pipeline(spark, src, out)
+    for c in glob.glob(f"{out}/_checkpoint/*.parquet"):
+        os.remove(c)
+    _append_pages(spark, src, 300, seed=7)
+
+    res = run_pipeline(spark, src, out)
+    assert res.units_processed == 2
+    assert _sink_totals(spark, out) == (res.rows_routed, res.rows_routed)
+
+
+def test_full_rerun_over_grown_input_replaces_not_duplicates(spark, tmp_path):
+    """``--full`` reprocesses every unit, committed or not: the earlier
+    batches' partitions must not survive beside the full batch, and a
+    later incremental run still finds everything committed."""
+    src, out = str(tmp_path / "pages"), str(tmp_path / "out")
+    _append_pages(spark, src, 500, seed=42)
+    run_pipeline(spark, src, out)
+    _append_pages(spark, src, 300, seed=7)
+
+    res = run_pipeline(spark, src, out, incremental=False)
+    assert res.units_processed == 2
+    assert _sink_totals(spark, out) == (res.rows_routed, res.rows_routed)
+    log = CheckpointTable(spark, f"{out}/_checkpoint").committed()
+    assert {b for b, _ in log} == {res.batch_id} and len(log) == 2
+    assert run_pipeline(spark, src, out).units_processed == 0
+    assert _sink_totals(spark, out) == (res.rows_routed, res.rows_routed)
+
+
+def test_full_rerun_crash_leaves_every_unit_pending(spark, tmp_path, monkeypatch):
+    """``--full`` dies in its routed write, after the committed batches'
+    partitions were deleted: the next incremental run must redo every
+    unit, not find them committed and leave the sinks empty."""
+    import juniper_syslog_filter_spark.pipeline as pl
+    from juniper_syslog_filter_spark.pipeline import build_routed
+
+    src, out = str(tmp_path / "pages"), str(tmp_path / "out")
+    _append_pages(spark, src, 500, seed=42)
+    run_pipeline(spark, src, out)
+    _append_pages(spark, src, 300, seed=7)
+
+    real = pl.route_repartition
+    crash = F.expr("raise_error('crash in the routed write')")
+    monkeypatch.setattr(pl, "route_repartition", lambda df: real(df).filter(crash.isNull()))
+    with pytest.raises(Exception, match="crash in the routed write"):
+        run_pipeline(spark, src, out, incremental=False)
+    monkeypatch.undo()
+
+    res = run_pipeline(spark, src, out)
+    assert res.units_processed == 2
+    expected = build_routed(spark, spark.read.parquet(src)).count()
+    assert res.rows_routed == expected
+    assert _sink_totals(spark, out) == (expected, expected)
 
 
 def test_enrich_severity_dim(spark):
