@@ -24,43 +24,45 @@ Idempotency protocol (SURVEY §7.4.5):
 
 from __future__ import annotations
 
-import glob
 import hashlib
-import os
 
 from pyspark.sql import SparkSession
 
-LOG_SCHEMA = (
-    "batch_id string, unit string, bytes_in long, rows_parsed long, "
-    "rows_routed long, stage string, committed_at timestamp"
-)
-
 
 class CheckpointTable:
+    """The lineage log: one parquet file per commit in a directory, read
+    and written driver-side through the Hadoop FileSystem, so every
+    scheme (``file:``, ``hdfs:``, ``s3a:``) takes the same path and no
+    Spark job runs in the serial tail."""
+
     def __init__(self, spark: SparkSession, path: str):
         self.spark = spark
         self.path = path
 
     def committed(self) -> set[tuple[str, str]]:
-        """(batch_id, unit) of every committed lineage row, read the way
-        :meth:`commit` writes them: driver-side with pyarrow on a local
-        path (no Spark job in the serial tail), else a Spark read that
-        names LOG_SCHEMA so nothing is inferred. A fresh output dir has
-        no log yet."""
-        local = _local_path(self.path)
-        if local is not None:
-            import pyarrow.parquet as pq
+        """(batch_id, unit) of every committed lineage row: each visible
+        ``.parquet`` file of the log directory, read whole. A fresh
+        output dir has no log yet."""
+        import pyarrow as pa
+        import pyarrow.parquet as pq
 
-            rows: set[tuple[str, str]] = set()
-            for f in glob.glob(os.path.join(local, "*.parquet")):
-                t = pq.read_table(f, columns=["batch_id", "unit"])
-                rows.update(zip(t["batch_id"].to_pylist(), t["unit"].to_pylist()))
-            return rows
         fs, p = _fs_path(self.spark, self.path)
         if not fs.exists(p):
             return set()
-        log = self.spark.read.schema(LOG_SCHEMA).parquet(self.path)
-        return {(r.batch_id, r.unit) for r in log.select("batch_id", "unit").distinct().collect()}
+        rows: set[tuple[str, str]] = set()
+        for st in fs.listStatus(p):
+            f = st.getPath()
+            name = f.getName()
+            if _hidden(name) or not name.endswith(".parquet"):
+                continue
+            stream = fs.open(f)
+            try:
+                data = stream.readAllBytes()
+            finally:
+                stream.close()
+            t = pq.read_table(pa.BufferReader(data), columns=["batch_id", "unit"])
+            rows.update(zip(t["batch_id"].to_pylist(), t["unit"].to_pylist()))
+        return rows
 
     def completed_units(self) -> set[str]:
         """Units with a committed lineage row."""
@@ -73,54 +75,46 @@ class CheckpointTable:
         fs.delete(p, True)
 
     def commit(self, rows: list[dict]) -> None:
-        """Atomic-enough append: one small parquet file per commit.
+        """Append one small parquet file holding ``rows``.
 
-        Written driver-side with pyarrow — the registry is tiny (one row
-        per input file), and a full Spark job for it measured 2-5 s of
-        pure serial tail per pipeline run. Local-path only fallback: on
-        a remote FS (hdfs:/s3a:) it goes through a 1-task Spark write.
+        The registry is tiny (one row per input file), so it is encoded
+        driver-side with pyarrow; a Spark job for it measured 2-5 s of
+        pure serial tail per pipeline run. Write-temp + rename: the
+        commit must be atomically present or absent (the resume
+        protocol's only invariant), and the dot-prefixed temp name is
+        invisible to :meth:`committed` and Spark's directory reader.
         """
         import datetime
-
-        now = datetime.datetime.now(datetime.timezone.utc)
-        cols = {
-            "batch_id": [r["batch_id"] for r in rows],
-            "unit": [r["unit"] for r in rows],
-            "bytes_in": [int(r.get("bytes_in", 0)) for r in rows],
-            "rows_parsed": [int(r.get("rows_parsed", 0)) for r in rows],
-            "rows_routed": [int(r.get("rows_routed", 0)) for r in rows],
-            "stage": [r.get("stage", "pipeline") for r in rows],
-            "committed_at": [now] * len(rows),
-        }
-        local = _local_path(self.path)
-        if local is None:
-            data = list(zip(*cols.values()))
-            self.spark.createDataFrame(data, LOG_SCHEMA).coalesce(1).write.mode(
-                "append"
-            ).parquet(self.path)
-            return
         import uuid
 
         import pyarrow as pa
         import pyarrow.parquet as pq
 
-        os.makedirs(local, exist_ok=True)
+        now = datetime.datetime.now(datetime.timezone.utc)
         table = pa.table(
             {
-                **{k: v for k, v in cols.items() if k != "committed_at"},
-                # spark-compatible timestamp[us] (NTZ would also read fine)
-                "committed_at": pa.array(cols["committed_at"], pa.timestamp("us", tz="UTC")),
+                "batch_id": pa.array([r["batch_id"] for r in rows], pa.string()),
+                "unit": pa.array([r["unit"] for r in rows], pa.string()),
+                "bytes_in": pa.array([int(r.get("bytes_in", 0)) for r in rows], pa.int64()),
+                "rows_parsed": pa.array([int(r.get("rows_parsed", 0)) for r in rows], pa.int64()),
+                "rows_routed": pa.array([int(r.get("rows_routed", 0)) for r in rows], pa.int64()),
+                "stage": pa.array([r.get("stage", "pipeline") for r in rows], pa.string()),
+                # Spark reads timestamp[us, UTC] as its TIMESTAMP type
+                "committed_at": pa.array([now] * len(rows), pa.timestamp("us", tz="UTC")),
             }
         )
-        # Write-temp + rename: the commit must be atomically present or
-        # absent (the resume protocol's only invariant). A direct write
-        # interrupted mid-flight would leave a truncated commit-*.parquet
-        # that poisons every later log read. The dot-prefixed temp name
-        # is also invisible to Spark/pyarrow directory listings.
-        final = os.path.join(local, f"commit-{uuid.uuid4().hex}.parquet")
-        tmp = os.path.join(local, f".{os.path.basename(final)}.tmp")
-        pq.write_table(table, tmp)
-        os.replace(tmp, final)  # atomic on POSIX
+        buf = pa.BufferOutputStream()
+        pq.write_table(table, buf)
+        fs, p = _fs_path(self.spark, self.path)
+        path_cls = self.spark.sparkContext._jvm.org.apache.hadoop.fs.Path
+        name = f"commit-{uuid.uuid4().hex}.parquet"
+        tmp = path_cls(p, f".{name}.tmp")
+        out = fs.create(tmp, False)
+        try:
+            out.write(buf.getvalue().to_pybytes())
+        finally:
+            out.close()
+        _rename(fs, tmp, path_cls(p, name))
 
 
 def batch_id_for(units: list[str]) -> str:
@@ -131,19 +125,18 @@ def batch_id_for(units: list[str]) -> str:
     return h.hexdigest()[:16]
 
 
-def _local_path(path: str) -> str | None:
-    """The local filesystem path of ``path``; None on a remote FS."""
-    if path.startswith("file:"):
-        return path[len("file:"):]
-    return None if "://" in path else path
-
-
 def _fs_path(spark: SparkSession, path: str):
     """(Hadoop FileSystem, Path) for ``path``, via the JVM gateway — works
     for any Hadoop-compatible filesystem (local, HDFS, s3a), not just
     local disk."""
     p = spark.sparkContext._jvm.org.apache.hadoop.fs.Path(path)
     return p.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration()), p
+
+
+def _rename(fs, src, dst) -> None:
+    """``fs.rename`` that raises where Hadoop returns false."""
+    if not fs.rename(src, dst):
+        raise OSError(f"rename {src} -> {dst} failed")
 
 
 def _hidden(name: str) -> bool:

@@ -126,19 +126,15 @@ def run_pipeline(
             _t = now
 
     all_files = list_parquet_files(spark, pages_path)
+    if not incremental and all_files:
+        ckpt.clear()  # before the sinks: a crash from here redoes all
+    committed = ckpt.committed()
     mark("list+checkpoint-read")
-    if incremental:
-        committed = ckpt.committed()
-        done = {u for _, u in committed}
-        pending = [(f, s) for f, s in all_files if f not in done]
-        keep = {b for b, _ in committed}
-    else:
-        pending = all_files
-        keep = set()
+    done = {u for _, u in committed}
+    pending = [(f, s) for f, s in all_files if f not in done]
+    keep = {b for b, _ in committed}
     if not pending:
         return PipelineResult(None, 0, 0, 0, routed_path, agg_path)
-    if not incremental:
-        ckpt.clear()  # before the sinks: a crash from here redoes all
     # A sink batch with no committed lineage row holds rows of units
     # this run reprocesses: drop it, or a changed pending set (hence
     # batch id) would duplicate those rows.

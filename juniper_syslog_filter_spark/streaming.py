@@ -116,8 +116,9 @@ def start_table_sink(
     on ``_batch_id`` and using dynamic partition overwrite
     (``tables.write_table`` → Iceberg ``overwritePartitions`` on a real
     catalog), so a replayed epoch REPLACES its own partition instead of
-    appending duplicates — the streaming analogue of the batch
-    checkpoint protocol (checkpoint.py docstring, step 4).
+    appending duplicates. The batch pipeline keys its sinks by batch
+    too, but deletes every uncommitted batch and then appends
+    (checkpoint.py docstring, step 4).
     """
     return (
         df.writeStream.foreachBatch(make_batch_writer(identifier, partition_cols))

@@ -1,18 +1,21 @@
 """Table layer: Iceberg when the runtime is present, parquet otherwise.
 
-The north rule targets Iceberg tables; this sandbox ships no
-iceberg-spark-runtime jar (checked: /opt/spark/jars), so every pipeline
-sink goes through this thin seam instead of hard-coding either format.
-On a cluster with Iceberg configured (catalog ``spark_catalog`` or any
-custom catalog), pass ``catalog.db.table`` identifiers and the same
-calls become Iceberg DSv2 writes — partitioned, snapshot-isolated, with
-``overwritePartitions()`` giving the idempotent batch replacement the
-checkpoint protocol needs (checkpoint.py docstring, step 4).
+The north rule targets Iceberg tables, but the Spark build this project
+runs on ships no iceberg-spark-runtime jar, so the streaming table sink
+(``streaming.make_batch_writer``) writes through this thin seam instead
+of hard-coding either format; the batch pipeline writes its parquet
+sinks itself. On a cluster with Iceberg configured (catalog
+``spark_catalog`` or any custom catalog), pass ``catalog.db.table``
+identifiers and the same calls become Iceberg DSv2 writes — partitioned,
+snapshot-isolated, with ``overwritePartitions()`` replacing a replayed
+streaming epoch's partition (``streaming.start_table_sink``).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
+
+from .checkpoint import _fs_path, _rename
 
 
 def have_iceberg(spark: SparkSession) -> bool:
@@ -87,29 +90,26 @@ def compact_table(
     open/footer costs and floods the driver's file listing. Compaction
     is the standing maintenance job. On Iceberg the same operation is
     ``rewrite_data_files`` (snapshot-isolated); this parquet-path
-    variant rewrites into a sibling directory and swaps atomically at
-    the directory level (rename), so a concurrent reader sees the old
-    or the new listing, never a mix.
+    variant rewrites into a sibling directory and swaps it in with two
+    directory renames through the Hadoop FileSystem (any scheme), so a
+    concurrent reader sees the old or the new listing, never a mix.
 
     The reference's cleanup stage (modules/cleanup_temp.py:19-63)
     deletes consumed inputs; under lazy evaluation nothing to delete
     remains, and THIS is what storage management means instead.
     """
     import math
-    import os
-    import shutil
 
-    total = 0
-    for root, _dirs, files in os.walk(path):
-        total += sum(os.path.getsize(os.path.join(root, f)) for f in files)
-    n_files = max(1, math.ceil(total / target_bytes))
+    fs, p = _fs_path(spark, path)
+    n_files = max(1, math.ceil(fs.getContentSummary(p).getLength() / target_bytes))
     df = spark.read.parquet(path)
     tmp = path.rstrip("/") + "__compact"
     df.repartition(n_files).write.mode("overwrite").parquet(tmp)
-    old = path.rstrip("/") + "__old"
-    os.rename(path, old)
-    os.rename(tmp, path)
-    shutil.rmtree(old)
+    path_cls = spark.sparkContext._jvm.org.apache.hadoop.fs.Path
+    old = path_cls(path.rstrip("/") + "__old")
+    _rename(fs, p, old)
+    _rename(fs, path_cls(tmp), p)
+    fs.delete(old, True)
     return n_files
 
 

@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import glob
 import re
+import uuid
 
 import numpy as np
 import pandas as pd
@@ -369,3 +370,47 @@ def test_checkpoint_fresh_dir_is_empty_and_log_round_trips(spark, tmp_path):
     ])
     ckpt.commit([{"batch_id": "b2", "unit": "file:/p/c.parquet"}])
     assert ckpt.completed_units() == {"file:/p/a.parquet", "file:/p/b.parquet", "file:/p/c.parquet"}
+
+
+@pytest.fixture
+def viewfs_root(spark, tmp_path):
+    """``tmp_path`` mounted as ``viewfs://<name>/data``: a filesystem
+    scheme other than ``file`` that needs no cluster. Hadoop caches one
+    FileSystem per scheme and authority, so every test mounts under a
+    fresh name."""
+    name = uuid.uuid4().hex
+    spark.sparkContext._jsc.hadoopConfiguration().set(
+        f"fs.viewfs.mounttable.{name}.link./data", "file://" + str(tmp_path)
+    )
+    return f"viewfs://{name}/data"
+
+
+def _job_ids(spark) -> set[int]:
+    return set(spark.sparkContext.statusTracker().getJobIdsForGroup(None))
+
+
+def test_checkpoint_log_on_viewfs_starts_no_spark_job(spark, viewfs_root):
+    """On a non-``file`` scheme the log is read, committed and cleared
+    through the Hadoop FileSystem alone, exactly as on a local path."""
+    ckpt = CheckpointTable(spark, f"{viewfs_root}/_checkpoint")
+    before = _job_ids(spark)
+    ckpt.commit([{"batch_id": "b1", "unit": "u/a"}, {"batch_id": "b1", "unit": "u/b"}])
+    ckpt.commit([{"batch_id": "b2", "unit": "u/c"}])
+    assert ckpt.committed() == {("b1", "u/a"), ("b1", "u/b"), ("b2", "u/c")}
+    ckpt.clear()
+    assert ckpt.committed() == set()
+    assert _job_ids(spark) == before
+
+
+def test_rerun_on_viewfs_is_noop_without_spark_job(spark, viewfs_root, tmp_path):
+    """A re-run with nothing pending lists the input and reads the log
+    driver-side, so it starts no Spark job on any filesystem."""
+    _append_pages(spark, str(tmp_path / "pages"), 500, seed=42)
+    src, out = f"{viewfs_root}/pages", f"{viewfs_root}/out"
+    res1 = run_pipeline(spark, src, out)
+    assert res1.units_processed == 1
+
+    before = _job_ids(spark)
+    assert run_pipeline(spark, src, out).units_processed == 0
+    assert _job_ids(spark) == before
+    assert _sink_totals(spark, out) == (res1.rows_routed, res1.rows_routed)

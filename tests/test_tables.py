@@ -113,6 +113,23 @@ def test_compact_table_reduces_files_preserves_rows(spark, tmp_path):
     assert got == want
 
 
+def test_compact_table_on_file_uri(spark, tmp_path):
+    """A ``file:`` URI is sized, swapped and cleaned up through the
+    Hadoop FileSystem like any other scheme; no sibling is left."""
+    import glob
+    import os
+
+    from juniper_syslog_filter_spark.tables import compact_table
+
+    path = tmp_path / "frag"
+    spark.range(0, 1000).repartition(8).write.parquet(str(path))
+    want = sorted(r.id for r in spark.read.parquet(str(path)).collect())
+    assert compact_table(spark, "file://" + str(path), target_bytes=1 << 30) == 1
+    assert len(glob.glob(f"{path}/*.parquet")) == 1
+    assert sorted(r.id for r in spark.read.parquet(str(path)).collect()) == want
+    assert os.listdir(tmp_path) == ["frag"]
+
+
 def test_iceberg_overwrite_partitions_roundtrip(spark, tmp_path):
     """GATED Iceberg integration (punch-list: 'best-effort runtime').
 
