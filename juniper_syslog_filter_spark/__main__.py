@@ -16,6 +16,8 @@ import json
 import sys
 import time
 
+from . import SEVERITY_NAMES
+
 
 def main(argv: list[str] | None = None) -> int:
     p = argparse.ArgumentParser(prog="juniper_syslog_filter_spark")
@@ -35,7 +37,7 @@ def main(argv: list[str] | None = None) -> int:
     r.add_argument(
         "--severity",
         default=None,
-        choices=["EMERGENCY", "ALERT", "CRITICAL", "ERROR", "WARNING", "NOTICE", "INFO", "DEBUG"],
+        choices=SEVERITY_NAMES,
         help="route only this severity (reference Phase 10)",
     )
     r.add_argument("--full", action="store_true", help="ignore checkpoint; reprocess everything")

@@ -10,17 +10,37 @@ Edge semantics replicated exactly (modules/classify_ip.py:32-101):
   ``"global"`` (is_private returns False, classify falls through)
 * 10/8, 172.16/12, 192.168/16 → ``"private"``; all else ``"global"``
 
-Python ``int(part)`` tolerates surrounding whitespace and leading zeros;
-Spark's ``CAST(s AS INT)`` does the same, so the two agree on those edges.
+Python ``int(part)`` reads any Unicode decimal digit (``int("١٠")`` is
+10); the JVM parse can put such digits in srcIP/dstIP, since its routing
+pattern matches ``\\p{Nd}``. Spark's ``CAST(s AS INT)`` reads ASCII digits
+only, so one ``translate`` first maps every non-ASCII digit to its ASCII
+value. Both accept leading zeros and ASCII spaces around an octet. Two
+``int()`` behaviours stay unmatched because the parse cannot produce them,
+only stage-CSV input can: stripping non-ASCII whitespace (``int("\\u2003 10")``
+is 10, Spark answers null → ``"global"``) and digit underscores
+(``int("1_0")`` is 10, likewise).
 """
 
 from __future__ import annotations
 
-from functools import reduce
+import unicodedata
+from functools import cache, reduce
 from operator import and_
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from ..operators.project import insert_columns
+
+
+@cache
+def _unicode_digits() -> tuple[str, str]:
+    """Every non-ASCII decimal digit Python ``int()`` reads, and its
+    ASCII value: 650 code points with Python 3.11's Unicode 14 tables."""
+    digits = [
+        c for c in map(chr, range(0x80, 0x110000)) if unicodedata.decimal(c, None) is not None
+    ]
+    return "".join(digits), "".join(str(unicodedata.decimal(c)) for c in digits)
 
 
 def _octet(ip: Column, i: int) -> Column:
@@ -38,7 +58,7 @@ def _octet(ip: Column, i: int) -> Column:
 
 
 def is_private_ip_expr(ip: Column) -> Column:
-    """Boolean column: ip is a valid RFC-1918 private address."""
+    """Boolean column: ip (ASCII digits) is a valid RFC-1918 private address."""
     # Exactly 3 dots ⇔ 4 parts (translate deletes, no regex).
     ndots = F.length(ip) - F.length(F.translate(ip, ".", ""))
     octs = [_octet(ip, i) for i in range(1, 5)]
@@ -54,6 +74,10 @@ def is_private_ip_expr(ip: Column) -> Column:
 
 def classify_ip_expr(ip: Column) -> Column:
     """'' | 'private' | 'global' with the reference's edge behavior."""
+    # Non-ASCII digits to ASCII. The first condition reads the translated
+    # ip too, so subexpression elimination evaluates the translate once
+    # per row instead of at each of the ~20 octet references.
+    ip = F.translate(ip, *_unicode_digits())
     return (
         F.when(ip.isNull() | (F.trim(ip) == ""), F.lit(""))
         .when(is_private_ip_expr(ip), F.lit("private"))
@@ -66,18 +90,8 @@ def classify_ips(df: DataFrame) -> DataFrame:
     dstIP_type after the corresponding IP columns, preserving the
     reference's column-order contract (tests/test_classify_ip.py:121-133).
     """
-    df = df.withColumn("srcIP_type", classify_ip_expr(F.col("srcIP"))).withColumn(
-        "dstIP_type", classify_ip_expr(F.col("dstIP"))
-    )
-    cols = [c for c in df.columns if c not in ("srcIP_type", "dstIP_type")]
-    ordered: list[str] = []
-    for c in cols:
-        ordered.append(c)
-        if c == "srcIP":
-            ordered.append("srcIP_type")
-        elif c == "dstIP":
-            ordered.append("dstIP_type")
-    return df.select(*ordered)
+    df = insert_columns(df, {"srcIP_type": classify_ip_expr(F.col("srcIP"))}, after="srcIP")
+    return insert_columns(df, {"dstIP_type": classify_ip_expr(F.col("dstIP"))}, after="dstIP")
 
 
 # Driver-local twins for unit tests (same contract as the reference's

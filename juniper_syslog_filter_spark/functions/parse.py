@@ -29,7 +29,10 @@ code points that Unicode 14 made letters or numbers (e.g. U+0870) are
 fences it off; every other code point is pinned equal.
 
 Missing values are the empty string, never null (modules/split_ip.py:70
-et al.). Column order follows the reference stage contracts (FIXTURES §3).
+et al.). Column order follows the reference stage contracts (FIXTURES §3):
+:func:`with_message_fields` is the one F1-F5 derivation from ``Message``,
+shared by :func:`parse_pages` and the m1/m2 queries, and it places its
+columns through ``operators.project.insert_columns``.
 
 :func:`parse_records_pandas` runs the verbatim patterns with pandas —
 the reference's own engine — on the driver. It is the oracle the tests
@@ -49,6 +52,8 @@ from __future__ import annotations
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from ..operators.project import insert_columns
 
 # Reference patterns, verbatim (Python ``re`` syntax).
 LOG_BLOCK_PATTERN = r'<pre class="log">(\S+) (\S+) (\S+) ([^<]*)</pre>'
@@ -147,7 +152,8 @@ def parse_pages(
     lineage = ["src_file"] if with_lineage else []
     if with_lineage:
         pages = pages.withColumn("src_file", F.col("_metadata.file_path"))
-    cols = ["url", "warc_ts", "lang", *lineage]
+    keys = ["url", "warc_ts", "lang"]
+    cols = [*keys, *lineage]
     html = F.col("html")
     # Recordless-page drop on raw bytes. Sound for ALL byte inputs: the
     # marker is pure ASCII and ASCII bytes are never valid UTF-8
@@ -184,39 +190,46 @@ def parse_pages(
     fields = F.explode(F.when(block != "", F.array(F.split(inner, " ", 4))))
     head = F.col("_h")
     recs = src.select(*cols, fields.alias("_h")).select(
-        *cols,
+        *keys,
         head[0].alias("Timestamp"),
         head[1].alias("Hostname"),
         head[2].alias("AppName"),
         head[3].alias("Message"),
+        *lineage,
     )
     if keyword is not None:
         # Case-sensitive literal substring of the Message (filter_keyword.py:62-68).
         recs = recs.filter(F.col("Message").contains(keyword))
+    return with_message_fields(recs)
+
+
+def with_message_fields(df: DataFrame) -> DataFrame:
+    """F1-F5 derived from ``df``'s ``Message`` column and placed right
+    before it: routing, srcIP, dstIP, protocol, SeverityLevel, Severity.
+
+    ``routing`` gets its own projection: both IPs read it twice, so
+    CollapseProject keeps its ROUTING regex in that projection and the
+    regex runs once per row instead of once per reference.
+    """
     msg = F.col("Message")
-    recs = recs.withColumn("routing", extract_routing_expr(msg))
+    df = insert_columns(df, {"routing": extract_routing_expr(msg)})
     src_ip, dst_ip = split_ip_exprs(F.col("routing"))
-    return recs.select(
-        "url",
-        "warc_ts",
-        "lang",
-        "Timestamp",
-        "Hostname",
-        "AppName",
-        "routing",
-        src_ip.alias("srcIP"),
-        dst_ip.alias("dstIP"),
-        extract_protocol_expr(msg).alias("protocol"),
-        extract_severity_level_expr(msg).alias("SeverityLevel"),
-        extract_severity_expr(msg).alias("Severity"),
-        "Message",
-        *lineage,
+    return insert_columns(
+        df,
+        {
+            "srcIP": src_ip,
+            "dstIP": dst_ip,
+            "protocol": extract_protocol_expr(msg),
+            "SeverityLevel": extract_severity_level_expr(msg),
+            "Severity": extract_severity_expr(msg),
+        },
     )
 
 
 # ---------------------------------------------------------------------------
-# F1-F5 as Catalyst expressions (JVM-side, whole-stage codegen), shared by
-# parse_pages, the per-module stages and the m* queries. regexp_extract
+# F1-F5 as Catalyst expressions (JVM-side, whole-stage codegen), composed
+# by with_message_fields and used one by one by the per-module stages
+# and p3/m3. regexp_extract
 # returns "" on no-match, matching the reference's fillna("") convention.
 # ---------------------------------------------------------------------------
 

@@ -35,7 +35,7 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from .checkpoint import CheckpointTable, batch_id_for, delete_batches, list_parquet_files
-from .datagen import device_dim, severity_dim
+from .datagen import PAGES_SCHEMA, device_dim, severity_dim
 from .enrich import enrich
 from .functions.parse import parse_pages
 
@@ -146,7 +146,7 @@ def run_pipeline(
 
     base = build_routed(
         spark,
-        spark.read.parquet(*unit_paths),
+        spark.read.schema(PAGES_SCHEMA).parquet(*unit_paths),
         keyword=keyword,
         severity_filter=severity_filter,
         with_lineage=True,
@@ -173,9 +173,13 @@ def run_pipeline(
     # collect) beat one combined groupBy: the combined key space
     # (sinks × dates × files) cartesians into ~10^6 rows whose driver
     # collect measured 13 s — far worse than the second ~0.5 s scan. The
-    # schema of the frame just written spares an inference job.
+    # schema of the frame just written spares an inference job, and
+    # reading only this batch's directory keeps the file index from
+    # listing (and partition-inferring) every batch ever written.
     routed_back = (
-        spark.read.schema(routed.schema).parquet(routed_path).filter(F.col("batch") == batch)
+        spark.read.schema(routed.schema)
+        .option("basePath", routed_path)
+        .parquet(f"{routed_path}/batch={batch}")
     )
     agg = aggregate_counts(routed_back).withColumn("batch", F.lit(batch))
     (

@@ -4,7 +4,8 @@ filter → parse → classify → severity route, expressed relationally.
 The m* queries synthesize the reference's syslog message grammar
 deterministically from ``events`` with pure integer arithmetic
 (:data:`_MSG_SQL` and its Spark twin :func:`_msg_col`), then run the
-full F1→F7 extract/classify chain, oracle-checked end to end.
+pipeline's own F1→F7 chain (``with_message_fields`` → ``classify_ips``),
+oracle-checked end to end.
 """
 
 from __future__ import annotations
@@ -16,7 +17,7 @@ from ..datagen import load_table
 from ..driver_queries import query
 from ..functions import parse as P
 from ..functions import pii as PII
-from ..functions.ip import classify_ip_expr
+from ..functions.ip import classify_ips
 from ..operators.filters import filter_and_merge_severity
 from ..operators.project import reduce_columns
 from ..session import spread_small_input
@@ -190,26 +191,8 @@ def q_m1_parse_classify(spark, sf_dir):
     """Reference pipeline F1→F7 relationally over synthesized messages:
     routing extract, IP split, private/global classify, protocol +
     severity extracts — '' conventions throughout."""
-    df = _events_with_msg(spark, sf_dir)
-    msg = F.col("Message")
-    routing = P.extract_routing_expr(msg)
-    src, dst = P.split_ip_exprs(routing)
-    out = df.select(
-        "event_id",
-        routing.alias("routing"),
-        src.alias("srcIP"),
-        dst.alias("dstIP"),
-        P.extract_protocol_expr(msg).alias("protocol"),
-        P.extract_severity_level_expr(msg).alias("SeverityLevel"),
-        P.extract_severity_expr(msg).alias("Severity"),
-    )
-    return out.select(
-        "event_id", "routing", "srcIP",
-        classify_ip_expr(F.col("srcIP")).alias("srcIP_type"),
-        "dstIP",
-        classify_ip_expr(F.col("dstIP")).alias("dstIP_type"),
-        "protocol", "SeverityLevel", "Severity",
-    )
+    df = _events_with_msg(spark, sf_dir).select("event_id", "Message")
+    return classify_ips(P.with_message_fields(df)).drop("Message")
 
 
 @query(oracle=f"""
@@ -232,21 +215,9 @@ def q_m2_critical_routed(spark, sf_dir):
     """Phases 1-10 composed: keyword filter → parse → classify →
     severity filter (the reference's canonical CLI path, run.py:42-433)."""
     df = _events_with_msg(spark, sf_dir).filter(F.col("Message").contains("observed"))
-    msg = F.col("Message")
-    routing = P.extract_routing_expr(msg)
-    src, dst = P.split_ip_exprs(routing)
-    out = df.select(
-        "event_id",
-        routing.alias("routing"),
-        src.alias("srcIP"),
-        dst.alias("dstIP"),
-        P.extract_severity_expr(msg).alias("Severity"),
-    ).filter(F.col("Severity") == "CRITICAL")
-    return out.select(
-        "event_id", "routing",
-        classify_ip_expr(F.col("srcIP")).alias("srcIP_type"),
-        classify_ip_expr(F.col("dstIP")).alias("dstIP_type"),
-        "Severity",
+    out = P.with_message_fields(df.select("event_id", "Message"))
+    return classify_ips(out.filter(F.col("Severity") == "CRITICAL")).select(
+        "event_id", "routing", "srcIP_type", "dstIP_type", "Severity"
     )
 
 

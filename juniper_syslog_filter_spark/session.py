@@ -66,10 +66,7 @@ def build_session(
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master)
-        # AQE: runtime partition coalescing + skew splitting, of joins and
-        # of the route's REBALANCE (an oversized sink gets several writers).
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
+        # The route's REBALANCE relies on AQE, which is on by default.
         # AQE coalesces post-shuffle partitions by BYTE size — a bad cost
         # proxy for CPU-heavy Arrow/pandas kernel stages, where it was
         # measured collapsing an explicit repartition(32) ahead of a
@@ -77,18 +74,10 @@ def build_session(
         # still merges genuinely tiny shuffles but keeps parallelism for
         # anything a Python kernel would chew on.
         .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         # Arrow transfer for pandas UDFs (text, dedup, source kernels) — batched
         # columnar exchange instead of per-row pickling.
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
-        # Broadcast threshold: dims (severity, devices) are tiny; keep the
-        # default 10 MB but make it explicit — large joins must shuffle,
-        # dims must not.
-        .config("spark.sql.autoBroadcastJoinThreshold", str(10 * 1024 * 1024))
-        # 128 MB scan splits: the sweet spot for parquet on object stores.
-        .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
         # Local mode: driver == executor == one JVM. Two measured
         # pathologies at local[32] on this (VM) host, both fatal to
         # scaling: (a) an 8g heap with 32 task threads GC-thrashes (2.6x

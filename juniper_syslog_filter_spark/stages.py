@@ -9,11 +9,13 @@ Inside the real pipeline these same expressions fuse into one Catalyst
 plan (pipeline.py); the standalone form exists for API parity and ad-hoc
 debugging, exactly like the reference's per-module mains.
 
-Column-order contract (SURVEY §1.3): every deriving stage re-inserts its
+Column-order contract (SURVEY §1.3): every deriving stage inserts its
 new column(s) at the reference's documented position (routing before
 Message, srcIP/dstIP after routing, *_type after each IP, protocol /
-SeverityLevel / Severity before Message), and the select enforcing it is
-explicit — Catalyst doesn't care, downstream CSV consumers do.
+SeverityLevel / Severity before Message) through
+``operators.project.insert_columns``, the one placement rule the parse
+and the m* queries use too — Catalyst doesn't care, downstream CSV
+consumers do.
 """
 
 from __future__ import annotations
@@ -26,27 +28,7 @@ from pyspark.sql import functions as F
 from .functions import parse as P
 from .functions.ip import classify_ips
 from .operators.filters import filter_keyword, filter_severity
-from .operators.project import reduce_columns
-
-
-def _insert_before(cols: list[str], new: list[str]) -> list[str]:
-    """Reference insertion rule: new columns go immediately before the
-    ``Message`` column (modules/extract_routing.py:89-95 et al.); if
-    ``Message`` is absent they append."""
-    out = [c for c in cols if c not in new]
-    if "Message" in out:
-        i = out.index("Message")
-        return out[:i] + new + out[i:]
-    return out + new
-
-
-def _with_before_message(df: DataFrame, named_cols: dict[str, F.Column]) -> DataFrame:
-    for name, col in named_cols.items():
-        df = df.withColumn(name, col)
-    order = _insert_before(
-        [c for c in df.columns if c not in named_cols], list(named_cols)
-    )
-    return df.select(*order)
+from .operators.project import insert_columns, reduce_columns
 
 
 def stage_filter_keyword(df: DataFrame, keyword: str = "RT_IDP_ATTACK") -> DataFrame:
@@ -66,18 +48,13 @@ def stage_reduce_columns(df: DataFrame, keep: str = "0,1,2,6") -> DataFrame:
 
 def stage_extract_routing(df: DataFrame) -> DataFrame:
     """F1 (modules/extract_routing.py:24-128): routing before Message."""
-    return _with_before_message(
-        df, {"routing": P.extract_routing_expr(F.col("Message"))}
-    )
+    return insert_columns(df, {"routing": P.extract_routing_expr(F.col("Message"))})
 
 
 def stage_split_ip(df: DataFrame) -> DataFrame:
     """F2 (modules/split_ip.py:27-132): srcIP,dstIP after routing."""
     src, dst = P.split_ip_exprs(F.col("routing"))
-    df = df.withColumn("srcIP", src).withColumn("dstIP", dst)
-    cols = [c for c in df.columns if c not in ("srcIP", "dstIP")]
-    i = cols.index("routing") + 1
-    return df.select(*cols[:i], "srcIP", "dstIP", *cols[i:])
+    return insert_columns(df, {"srcIP": src, "dstIP": dst}, after="routing")
 
 
 def stage_classify_ip(df: DataFrame) -> DataFrame:
@@ -88,23 +65,17 @@ def stage_classify_ip(df: DataFrame) -> DataFrame:
 
 def stage_extract_protocol(df: DataFrame) -> DataFrame:
     """F3 (modules/extract_protocol.py:28-126)."""
-    return _with_before_message(
-        df, {"protocol": P.extract_protocol_expr(F.col("Message"))}
-    )
+    return insert_columns(df, {"protocol": P.extract_protocol_expr(F.col("Message"))})
 
 
 def stage_extract_severity_level(df: DataFrame) -> DataFrame:
     """F4 (modules/extract_severity_level.py:28-126; kept as string)."""
-    return _with_before_message(
-        df, {"SeverityLevel": P.extract_severity_level_expr(F.col("Message"))}
-    )
+    return insert_columns(df, {"SeverityLevel": P.extract_severity_level_expr(F.col("Message"))})
 
 
 def stage_extract_severity(df: DataFrame) -> DataFrame:
     """F5 (modules/extract_severity.py:28-126)."""
-    return _with_before_message(
-        df, {"Severity": P.extract_severity_expr(F.col("Message"))}
-    )
+    return insert_columns(df, {"Severity": P.extract_severity_expr(F.col("Message"))})
 
 
 def stage_merge(df: DataFrame) -> DataFrame:

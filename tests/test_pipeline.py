@@ -3,6 +3,7 @@ row-set equality, aggregate==sink-count invariant, idempotent resume."""
 
 from __future__ import annotations
 
+import datetime
 import glob
 import re
 import uuid
@@ -327,6 +328,70 @@ def test_full_rerun_crash_leaves_every_unit_pending(spark, tmp_path, monkeypatch
     expected = build_routed(spark, spark.read.parquet(src)).count()
     assert res.rows_routed == expected
     assert _sink_totals(spark, out) == (expected, expected)
+
+
+def test_stray_directory_in_an_older_batch_leaves_the_next_run_alone(spark, tmp_path):
+    """The read-back behind the aggregate and the lineage lists only the
+    batch this run wrote: a stray directory level inside an older
+    committed batch is never listed, so its partition names cannot
+    conflict with the sink's."""
+    import os
+    import shutil
+
+    src, out = str(tmp_path / "pages"), str(tmp_path / "out")
+    _append_pages(spark, src, 500, seed=42)
+    first = run_pipeline(spark, src, out)
+    part = sorted(glob.glob(f"{out}/routed/batch={first.batch_id}/Severity=*/lang=en/*.parquet"))[0]
+    stray = os.path.join(os.path.dirname(part), "extra=1")
+    os.makedirs(stray)
+    shutil.copy(part, stray)
+    _append_pages(spark, src, 300, seed=7)
+
+    res = run_pipeline(spark, src, out)
+    assert res.units_processed == 1 and res.rows_routed > 0
+    assert sum(r["rows_routed"] for r in res.lineage) == res.rows_routed
+    agg = spark.read.parquet(f"{out}/agg/batch={res.batch_id}").agg(F.sum("n")).collect()[0][0]
+    assert agg == res.rows_routed
+
+
+def test_run_starts_no_spark_job_before_the_route(spark, tmp_path, monkeypatch):
+    """Everything before the routed write is driver-side: listing, the
+    log read, the batch deletes and the plan. The pages are read by their
+    declared schema, so no job infers it from parquet footers."""
+    import juniper_syslog_filter_spark.pipeline as pl
+
+    src = str(tmp_path / "pages")
+    _append_pages(spark, src, 500, seed=42)
+    started = []
+
+    def stop(df):
+        started.append(_job_ids(spark) - before)
+        raise RuntimeError("stop at the route")
+
+    monkeypatch.setattr(pl, "route_repartition", stop)
+    before = _job_ids(spark)
+    with pytest.raises(RuntimeError, match="stop at the route"):
+        run_pipeline(spark, src, str(tmp_path / "out"))
+    assert started == [set()]
+
+
+def test_unicode_digit_ip_classified_like_python(spark):
+    """The routing pattern matches any Unicode decimal digit, so a parsed
+    srcIP can be Arabic-Indic; its type is what Python's ``int()``-based
+    classifier answers."""
+    from juniper_syslog_filter_spark.datagen import PAGES_SCHEMA
+    from juniper_syslog_filter_spark.pipeline import build_routed
+
+    msg = "RT_IDP_ATTACK: observed ١٠.٠.٠.١/5 > 8.8.8.٨/80 protocol=tcp Severity=CRITICAL"
+    html = f'<pre class="log">t host1.example.com a {msg}</pre>'.encode()
+    pages = spark.createDataFrame(
+        [("u", datetime.datetime(2025, 4, 28), html, "", "en")], PAGES_SCHEMA
+    )
+    rows = build_routed(spark, pages).select("srcIP", "srcIP_type", "dstIP", "dstIP_type").collect()
+    assert [tuple(r) for r in rows] == [
+        ("١٠.٠.٠.١", classify_ip_address("١٠.٠.٠.١"), "8.8.8.٨", classify_ip_address("8.8.8.٨"))
+    ]
+    assert rows[0].srcIP_type == "private"
 
 
 def test_enrich_severity_dim(spark):

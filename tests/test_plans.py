@@ -151,6 +151,22 @@ def test_parse_and_enrich_plans_run_no_python(spark, kw_pages, keyword_parsed):
     assert "Scan ExistingRDD" not in routed
 
 
+def test_routing_regex_runs_once_per_row(spark, kw_pages):
+    """The pipeline and m1 share one F1-F5 derivation: its routing
+    projection keeps the ROUTING regex's two groups, once each in the
+    routing CASE and once each in its concat, in one Project. An inlined
+    routing repeats them in every IP and classifier reference (20)."""
+    from juniper_syslog_filter_spark.functions.parse import _ROUTING_JVM
+
+    def optimized(df):
+        return df._jdf.queryExecution().optimizedPlan().toString()
+
+    routed = build_routed(spark, kw_pages, with_lineage=True)
+    assert optimized(routed).count(_ROUTING_JVM) == 4
+    m1 = QUERIES["m1_parse_classify"](spark, SF)
+    assert optimized(m1).count(_ROUTING_JVM) == 4
+
+
 def test_pipeline_enrich_joins_are_broadcast(spark, keyword_parsed):
     plan = _plan(enrich(keyword_parsed, severity_dim(spark), device_dim(spark)))
     assert plan.count("BroadcastHashJoin") == 2

@@ -15,6 +15,7 @@ max_examples is kept low because a Spark round-trip costs ~0.2 s.
 from __future__ import annotations
 
 import re
+import unicodedata
 
 import duckdb
 import pandas as pd
@@ -77,10 +78,28 @@ _octet = st.one_of(
     st.sampled_from([9, 10, 11, 171, 172, 173, 15, 16, 31, 32, 167, 168, 169]),
     st.integers(min_value=256, max_value=999),
 )
+
+# Every Unicode decimal digit zero; digit d of a script is its zero + d.
+_ND_ZEROS = [
+    c for c in map(chr, range(0x110000)) if unicodedata.category(c) == "Nd" and unicodedata.decimal(c) == 0
+]
+
+
+def _in_scripts(octet: int, zeros: list[str]) -> str:
+    return "".join(chr(ord(z) + int(d)) for d, z in zip(str(octet), zeros))
+
+
+# RFC-1918-leaning IPs whose every digit is written in a script drawn
+# from all Unicode decimal digit sets, ASCII included.
+_nd_octets = st.tuples(st.sampled_from([10, 172, 192]), st.sampled_from([0, 16, 31, 168]), _octet, _octet)
+_nd_ip = st.tuples(_nd_octets, st.lists(st.sampled_from(_ND_ZEROS), min_size=12, max_size=12)).map(
+    lambda t: ".".join(_in_scripts(o, t[1][3 * i :]) for i, o in enumerate(t[0]))
+)
 _ipish = st.one_of(
     st.tuples(_octet, _octet, _octet, _octet).map(
         lambda t: ".".join(map(str, t))
     ),
+    _nd_ip,
     st.tuples(_octet, _octet, _octet).map(lambda t: ".".join(map(str, t))),
     st.sampled_from(["", " ", "...", "a.b.c.d", "10.0.0.1.2", "10..0.1"]),
     st.text(alphabet="0123456789. ", min_size=0, max_size=16),
@@ -88,6 +107,7 @@ _ipish = st.one_of(
 
 
 @given(ips=st.lists(_ipish, min_size=1, max_size=12))
+@example(ips=["١٠.٠.٠.١", "١٩٢.١٦٨.1.1", "10.0.0.٣", "𝟏𝟎.0.0.1"])
 @settings(**SETTINGS)
 def test_ip_classifier_expr_matches_python(spark, ips):
     df = spark.createDataFrame([(ip,) for ip in ips], "ip string")
